@@ -1,9 +1,8 @@
 """Deduplication operators over document corpora (SURVEY §2.3).
 
-Scale doctrine: never materialize the O(n²) pair space. Exact dedup is a
-16-byte-digest hash aggregate; MinHash/SimHash go through LSH-band blocking
-so only bucket-colliding candidate pairs are verified; n-gram Jaccard goes
-through an inverted-index (posting-list) join. Everything is pure DataFrame
+Scale doctrine: never materialize the O(n²) pair space. MinHash/SimHash
+go through LSH-band blocking so only bucket-colliding candidate pairs are
+verified; n-gram Jaccard goes through an inverted-index (posting-list) join. Everything is pure DataFrame
 expressions — deterministic (fixed hash-family coefficients, no RNG), so
 results are reproducible run-to-run and testable.
 """
@@ -22,19 +21,6 @@ _A = [2 * j + 1 for j in range(1, 129)]  # odd multipliers
 _B = [(j * j * 7919 + 104729) % _P for j in range(1, 129)]
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep the lowest id per exact content hash (one shuffle of digests).
-
-    100 TB: the shuffle carries sha2 digests + ids, never document bodies.
-    """
-    return (
-        df.select(F.sha2(F.col(text_col), 256).alias("_h"), F.col(id_col))
-        .groupBy("_h")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
-        .drop("_h")
-    )
-
-
 def tokenize(text: Column) -> Column:
     return F.array_distinct(F.split(F.lower(text), r"\s+"))
 
@@ -47,14 +33,9 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
 
 
-def _h32(col: Column) -> Column:
-    """xxhash64 folded into [0, P) — keeps downstream affine hashing in
-    overflow-safe range."""
-    return F.pmod(F.xxhash64(col), F.lit(_P))
-
-
 def _pmodP(h: Column) -> Column:
-    """Fold an xxhash64 long into [0, P) (see ``_h32``)."""
+    """Fold an xxhash64 long into [0, P): keeps downstream affine hashing
+    in overflow-safe range."""
     return F.pmod(h, F.lit(_P))
 
 
@@ -84,15 +65,6 @@ def shingle_hashes(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Dat
     return base.select(
         "_sid", F.array_distinct(F.transform(idx, gram)).alias("_shingle_hashes")
     )
-
-
-def minhash_signature(shingles: Column, k: int = 32) -> Column:
-    """k-permutation MinHash signature as an array<int> expression.
-
-    One xxhash64 per shingle, then k affine maps over the folded hash —
-    all inside codegen; no UDF, no RNG.
-    """
-    return minhash_signature_from_hashes(F.transform(shingles, _h32), k)
 
 
 def minhash_signature_from_hashes(hashed: Column | str, k: int = 32) -> Column:

@@ -110,23 +110,6 @@ def decode_features(df: DataFrame, media_col: str = "media") -> DataFrame:
     return df.mapInPandas(op, out_schema)
 
 
-def resize_stub(df: DataFrame, media_col: str, target_w: int, target_h: int) -> DataFrame:
-    """Resize plumbing: passes blobs through mapInPandas with the target
-    dims recorded; the pixel work is the NotImplementedError stub."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def _resize(blob: bytes) -> bytes:
-                meta = _decode_blob(blob)  # validates format
-                # real impl: decode pixels, resample, re-encode
-                return blob[:6] + struct.pack(">HH", target_w, target_h) + blob[10:]
-
-            pdf[media_col] = pdf[media_col].map(_resize)
-            yield pdf
-
-    return df.mapInPandas(op, df.schema.simpleString()[7:-1].replace(":", " ").replace(",", ", "))
-
-
 def frame_sample_stub(df: DataFrame, media_col: str, every_n: int = 10) -> DataFrame:
     """Video frame sampling plumbing: one row in → k frame rows out
     (mapInPandas is the right shape for row-expanding media ops)."""

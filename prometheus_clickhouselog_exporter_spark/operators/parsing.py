@@ -59,14 +59,6 @@ ERROR_RE = (
 TS_FORMAT = "yyyy.MM.dd HH:mm:ss.SSSSSS"
 
 
-def _groups(line: Column, pattern: str, n: int) -> Column:
-    """One-pass multi-group extract: full-match rewrite to a -joined
-    string, then split. NULL array when the pattern does not match."""
-    replacement = SEP.join(f"${i}" for i in range(1, n + 1))
-    joined = F.regexp_replace(line, pattern, replacement)
-    return F.when(line.rlike(pattern), F.split(joined, SEP))
-
-
 def _ts(raw: Column) -> Column:
     """C2: reference layout 2006.01.02 15:04:05.999999 (query.go:110).
 

@@ -85,8 +85,11 @@ def suffix_lcp_unbounded(
 
     SINGLE-CONSUMPTION CONTRACT (ADVICE r13 #4): the returned adjacency
     frame is NOT checkpointed — a consumer that triggers it more than
-    once re-runs the O(n·cap) certified sort each time. The sole caller
-    (llmdata13) consumes it linearly; add ``.localCheckpoint(eager=False)``
+    once re-runs the O(n·cap) certified sort each time. Its callers,
+    ``dedup_longest_substring_unbounded`` (llmdata18.py:140) and
+    ``suffix_lcp_auto`` (its "doubling" form, used by llmdata22), consume
+    it linearly; llmdata13's truncated form only cites it as the
+    extension for unbounded documents. Add ``.localCheckpoint(eager=False)``
     at the call site if a multi-action consumer ever appears.
     """
     tokens = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit(""))

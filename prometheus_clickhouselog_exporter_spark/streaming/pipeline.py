@@ -19,6 +19,7 @@ map on restart).
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -29,6 +30,9 @@ from ..operators.parsing import parse_log_lines
 from ..sources.logsource import read_log_stream
 from .session_state import sessionize_stream
 from .sink import PrometheusSnapshotSink
+
+# Longest stop() waits for a running session trigger to finish.
+_STOP_WAIT_S = 20.0
 
 
 @dataclass
@@ -50,9 +54,22 @@ class LogPipeline:
             self.sessions_query.processAllAvailable()
 
     def stop(self) -> None:
-        for q in (self.sessions_query, self.lines_query):
-            if q.isActive:
-                q.stop()
+        """Graceful shutdown (K2). Stopping the session stream while its
+        foreachBatch hook runs Spark jobs can kill the stream thread with
+        a StackOverflowError (Spark matches the long py4j error message
+        against a backtracking regex), so the lines stream stops first and
+        a running session trigger is let finish (bounded by ``_STOP_WAIT_S``):
+        the stop then lands in the wait for the next trigger."""
+        if self.lines_query.isActive:
+            self.lines_query.stop()
+        q = self.sessions_query
+        last = (q.lastProgress or {}).get("batchId")
+        deadline = time.monotonic() + _STOP_WAIT_S
+        while (q.isActive and q.status["isTriggerActive"] and time.monotonic() < deadline
+               and (q.lastProgress or {}).get("batchId") == last):
+            time.sleep(0.01)
+        if q.isActive:
+            q.stop()
 
 
 def run_log_pipeline(

@@ -1,10 +1,12 @@
 """Prometheus-style sink (reference K1, main.go:55-68 + metrics.go).
 
 The reference exposes monotone counters/histograms via a pull endpoint.
-Here each micro-batch is aggregated IN SPARK down to a handful of
-(label → delta) rows, and only those tiny deltas reach the driver, which
-merges them into a monotone snapshot — the same accumulate-forever
-semantics promhttp serves, with per-batch work independent of batch size.
+Here each micro-batch is reduced IN SPARK by ONE grouped aggregate (one
+Spark job) to a row per (row_type, err_type, obs_label, error_code) that
+carries the row count and every histogram's bucket/count/sum deltas. Only
+those few rows reach the driver, which routes each by its row_type into a
+monotone snapshot — the same accumulate-forever semantics promhttp serves,
+with per-batch cost independent of batch size and of the collector count.
 
 ``render_exposition()`` emits the Prometheus text format so the snapshot
 can be served by any HTTP server (a real deployment would put this behind
@@ -72,63 +74,52 @@ class PrometheusSnapshotSink:
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Merge one micro-batch of session/obs/err rows into the snapshot.
 
-        All heavy lifting stays distributed: per-batch conditional
-        aggregates reduce the batch to O(labels × buckets) rows first.
+        One Spark action: a groupBy over the four label columns carries
+        ``count(1)`` plus, per histogram, cumulative bucket sums,
+        ``count(v)`` and ``sum(v)``. Each returned row is routed on the
+        driver by its row_type. The batch is cached only when the parquet
+        append reads it a second time.
         """
-        batch_df = batch_df.cache()
+        aggs = [F.count(F.lit(1)).alias("n")]
+        for name, (col, buckets, _, _) in _HISTOGRAMS.items():
+            v = F.col(col).cast("double")
+            aggs += [F.count_if(v <= float(b)).alias(f"{name}_b{i}") for i, b in enumerate(buckets)]
+            aggs += [F.count(v).alias(f"{name}_cnt"), F.sum(v).alias(f"{name}_sum")]
+        path = self.session_parquet_path
+        if path:
+            batch_df = batch_df.cache()
         try:
-            errs = (
-                batch_df.filter(F.col("row_type") == "err")
-                .groupBy("err_type").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            inis = (
-                batch_df.filter(F.col("row_type") == "obs_initial")
-                .groupBy("obs_label").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            qerrs = (
-                batch_df.filter(F.col("row_type") == "obs_error")
-                .groupBy("obs_label", "error_code").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            hists = {}
-            for name, (col, buckets, row_type, labelled) in _HISTOGRAMS.items():
-                src = batch_df.filter(F.col("row_type") == row_type)
-                label = F.col("obs_label") if labelled else F.lit("")
-                v = F.col(col).cast("double")
-                aggs = [
-                    F.sum(F.when(v <= F.lit(float(b)), 1).otherwise(0)).alias(f"b{i}")
-                    for i, b in enumerate(buckets)
-                ]
-                aggs += [F.count(v).alias("cnt"), F.sum(v).alias("s")]
-                hists[name] = src.groupBy(label.alias("label")).agg(*aggs).collect()
-            n_sessions = batch_df.filter(F.col("row_type") == "session").count()
-            n_timeouts = batch_df.filter(F.col("row_type") == "timeout_evict").count()
-            if self.session_parquet_path and n_sessions:
-                (
-                    batch_df.filter(F.col("row_type") == "session")
-                    .drop("row_type", "err_type", "obs_label")
-                    .write.mode("append")
-                    .parquet(self.session_parquet_path)
-                )
+            keys = ("row_type", "err_type", "obs_label", "error_code")
+            rows = batch_df.groupBy(*keys).agg(*aggs).collect()
+            if path and any(r["row_type"] == "session" for r in rows):
+                (batch_df.filter(F.col("row_type") == "session")
+                 .drop("row_type", "err_type", "obs_label").write.mode("append").parquet(path))
         finally:
-            batch_df.unpersist()
+            if path:
+                batch_df.unpersist()
 
         with self._lock:
-            for r in errs:
-                self.exporter_errors[r["err_type"]] += r["n"]
-            for r in inis:
-                self.query_count[r["obs_label"]] += r["n"]
-            for r in qerrs:
-                self.query_errors[(r["obs_label"], str(r["error_code"]))] += r["n"]
-            for name, rows in hists.items():
-                _, buckets, _, _ = _HISTOGRAMS[name]
-                for r in rows:
-                    h = self.histograms[name].setdefault(r["label"], _Hist(buckets))
+            for r in rows:
+                row_type, n = r["row_type"], r["n"]
+                if row_type == "err":
+                    self.exporter_errors[r["err_type"]] += n
+                elif row_type == "obs_initial":
+                    self.query_count[r["obs_label"]] += n
+                elif row_type == "obs_error":
+                    self.query_errors[(r["obs_label"], str(r["error_code"]))] += n
+                elif row_type == "session":
+                    self.sessions += n
+                elif row_type == "timeout_evict":
+                    self.timeouts += n
+                for name, (_, buckets, hist_row_type, labelled) in _HISTOGRAMS.items():
+                    if row_type != hist_row_type:
+                        continue
+                    label = r["obs_label"] if labelled else ""
+                    h = self.histograms[name].setdefault(label, _Hist(buckets))
                     for i, b in enumerate(h.buckets):
-                        h.counts[b] += r[f"b{i}"] or 0
-                    h.total += r["cnt"]
-                    h.sum += r["s"] or 0.0
-            self.sessions += n_sessions
-            self.timeouts += n_timeouts
+                        h.counts[b] += r[f"{name}_b{i}"]
+                    h.total += r[f"{name}_cnt"]
+                    h.sum += r[f"{name}_sum"] or 0.0
 
     def count_lines_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """A1 read_lines (main.go:119): counts raw source lines per batch."""

@@ -6,6 +6,7 @@ model (main.go:125-129)."""
 from __future__ import annotations
 
 import os
+import threading
 import time
 from datetime import datetime, timedelta
 
@@ -19,6 +20,7 @@ from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
     stats_line,
 )
 from prometheus_clickhouselog_exporter_spark.streaming import (
+    SESSION_OUTPUT_SCHEMA,
     PrometheusSnapshotSink,
     run_log_pipeline,
 )
@@ -161,3 +163,181 @@ def test_rocksdb_state_store_provider(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def _batch(spark, rows: list[dict]):
+    """A micro-batch of the session stream built by hand: every column of
+    SESSION_OUTPUT_SCHEMA NULL unless the row sets it."""
+    cols = spark.createDataFrame([], SESSION_OUTPUT_SCHEMA).columns
+    return spark.createDataFrame(
+        [tuple(r.get(c) for c in cols) for r in rows], SESSION_OUTPUT_SCHEMA
+    )
+
+
+def _session(qid: str, **kw) -> dict:
+    return {
+        "row_type": "session", "id": qid, "stmt_type": "select", "start_time": T,
+        "end_time": T + timedelta(seconds=2), "rows_read": 500, "bytes_read": 1024,
+        "rps": 500, "speed": 1024, "memory": 2**20, "elapsed": 2.0, "error": False,
+        "full_info": True, **kw,
+    }
+
+
+# Every row_type the session fold emits; NULL obs_label and NULL values in
+# the histogram columns included. Session rows carry values in every
+# histogram column too: they must count as sessions only.
+_MIXED = (
+    [{"row_type": "err", "err_type": "convert"}] * 2
+    + [{"row_type": "err", "err_type": "not_found_query"}]
+    + [{"row_type": "obs_initial", "obs_label": "select"}] * 2
+    + [{"row_type": "obs_initial", "obs_label": "insert"}, {"row_type": "obs_initial"}]
+    + [{"row_type": "obs_error", "obs_label": "select", "error_code": 60}] * 2
+    + [{"row_type": "obs_error", "obs_label": "select", "error_code": 47},
+       {"row_type": "obs_error", "obs_label": "insert", "error_code": 60}]
+    + [{"row_type": "obs_time", "obs_label": "select", "elapsed": 0.5},
+       {"row_type": "obs_time", "obs_label": "select", "elapsed": 3.0},
+       {"row_type": "obs_time", "obs_label": "select"},
+       {"row_type": "obs_time", "obs_label": "insert", "elapsed": 100.0},
+       {"row_type": "obs_time", "elapsed": 2.0}]
+    + [{"row_type": "obs_stats", "rows_read": 500, "bytes_read": 6 * 2**30,
+        "rps": 60_000, "speed": 2**20},
+       {"row_type": "obs_stats", "rows_read": 20_000_000, "bytes_read": 1024,
+        "rps": 2_000_000, "speed": 600 * 2**20},
+       {"row_type": "obs_stats"}]
+    + [_session("s1"), _session("s2", error=True, error_code=60), _session("s3")]
+    + [{"row_type": "timeout_evict", "id": "t1"}, {"row_type": "timeout_evict", "id": "t2"}]
+)
+
+
+def _cumulative(h) -> dict:
+    return {b: int(h.counts[b]) for b in h.buckets}
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs on this thread."""
+    sc = spark.sparkContext
+    group = f"sink-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_process_batch_merges_every_row_type_in_one_job(spark):
+    """The fused merge on a static batch: exact deltas for every collector
+    from one Spark job. Micro-batches run with adaptive execution off (the
+    stream's own session disables it), so the call does here too."""
+    sink = PrometheusSnapshotSink()
+    df = _batch(spark, _MIXED)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert _jobs_of(spark, lambda: sink.process_batch(df, 0)) == 1
+        empty = _batch(spark, [])
+        assert _jobs_of(spark, lambda: sink.process_batch(empty, 1)) == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+    assert dict(sink.exporter_errors) == {"convert": 2, "not_found_query": 1}
+    assert dict(sink.query_count) == {"select": 2, "insert": 1, None: 1}
+    assert dict(sink.query_errors) == {("select", "60"): 2, ("select", "47"): 1, ("insert", "60"): 1}
+    assert sink.sessions == 3
+    assert sink.timeouts == 2
+    assert sink.read_lines == 0
+
+    qt = sink.histograms["clickhouse_query_time"]
+    assert set(qt) == {"select", "insert", None}
+    assert (qt["select"].total, qt["select"].sum) == (2, 3.5)
+    assert _cumulative(qt["select"]) == {b: (1 if b == 1 else 2) for b in qt["select"].buckets}
+    assert (qt["insert"].total, qt["insert"].sum) == (1, 100.0)
+    assert _cumulative(qt["insert"]) == {b: int(b >= 100) for b in qt["insert"].buckets}
+    assert (qt[None].total, qt[None].sum) == (1, 2.0)
+    assert _cumulative(qt[None]) == {b: int(b >= 2) for b in qt[None].buckets}
+
+    def stats(name):
+        by_label = sink.histograms[name]
+        assert set(by_label) == {""}
+        return by_label[""]
+
+    rr = stats("clickhouse_select_query_rows_read")
+    assert (rr.total, rr.sum) == (2, 20_000_500.0)
+    assert _cumulative(rr) == {b: (b >= 500) + (b >= 2e7) for b in rr.buckets}
+    br = stats("clickhouse_select_query_bytes_read")
+    assert (br.total, br.sum) == (2, 6 * 2**30 + 1024.0)
+    assert _cumulative(br) == {b: 1 + (b >= 6 * 2**30) for b in br.buckets}
+    rps = stats("clickhouse_select_query_rows_per_second")
+    assert (rps.total, rps.sum) == (2, 2_060_000.0)
+    assert _cumulative(rps) == {b: (b >= 6e4) + (b >= 2e6) for b in rps.buckets}
+    bps = stats("clickhouse_select_query_bytes_per_second")
+    assert (bps.total, bps.sum) == (2, 601.0 * 2**20)
+    assert _cumulative(bps) == {b: 1 + (b >= 600 * 2**20) for b in bps.buckets}
+
+
+def test_process_batch_appends_only_session_rows_to_parquet(spark, tmp_path):
+    path = str(tmp_path / "sessions")
+    sink = PrometheusSnapshotSink(session_parquet_path=path)
+    no_sessions = [r for r in _MIXED if r["row_type"] != "session"]
+    sink.process_batch(_batch(spark, no_sessions), 0)
+    assert not os.path.exists(path)  # nothing written, not even an empty file
+
+    sink.process_batch(_batch(spark, _MIXED), 1)
+    out = spark.read.parquet(path)
+    dropped = {"row_type", "err_type", "obs_label"}
+    assert out.columns == [c for c in _batch(spark, []).columns if c not in dropped]
+    assert sorted(r["id"] for r in out.collect()) == ["s1", "s2", "s3"]
+    files = sorted(os.listdir(path))
+
+    sink.process_batch(_batch(spark, no_sessions), 2)
+    assert sorted(os.listdir(path)) == files
+    assert sink.sessions == 3
+    assert sink.exporter_errors["convert"] == 6  # the merge still ran
+
+
+class _SignallingSink(PrometheusSnapshotSink):
+    """Sets ``in_batch`` when a session micro-batch enters the hook."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.in_batch = threading.Event()
+
+    def process_batch(self, batch_df, epoch_id):
+        self.in_batch.set()
+        super().process_batch(batch_df, epoch_id)
+
+
+def test_stop_live_pipeline_leaves_no_dead_stream(spark, tmp_path):
+    """Graceful stop (K2) requested while the session stream's foreachBatch
+    hook runs: both streams end without an error, and no stream thread
+    dies on the way out. A thread killed mid-batch (a StackOverflowError
+    in Spark's stop-interrupt check) leaves ``exception()`` empty; only
+    the JVM's uncaught-exception report on System.err shows it, so that
+    stream is captured around the stop."""
+    log_dir = tmp_path / "logs"
+    log_dir.mkdir()
+    FixtureLog([initial_line(T, 1, "q-live", "10.1.0.1", 9000, "SELECT 1")]).write(
+        str(log_dir / "00.log")
+    )
+    # The armed session timer makes every 1 s trigger run a micro-batch.
+    pipe = run_log_pipeline(
+        spark, str(log_dir), str(tmp_path / "ckpt"), _SignallingSink(),
+        timeout_ms=3_600_000, max_files_per_trigger=1,
+    )
+    jvm = spark.sparkContext._jvm
+    err, report = jvm.System.err, jvm.java.io.ByteArrayOutputStream()
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline and pipe.sink.query_count["select"] == 0:
+            time.sleep(0.2)
+        pipe.sink.in_batch.clear()
+        assert pipe.sink.in_batch.wait(30)
+        jvm.System.setErr(jvm.java.io.PrintStream(report, True))
+    finally:
+        pipe.stop()
+        jvm.System.setErr(err)
+    assert pipe.sink.query_count["select"] == 1
+    assert 'Exception in thread "stream execution thread' not in report.toString()
+    for q in (pipe.sessions_query, pipe.lines_query):
+        assert not q.isActive
+        assert q.exception() is None

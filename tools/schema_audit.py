@@ -5,7 +5,8 @@ an array/map/struct-typed final column raises ``TypeError: unhashable
 type`` there and makes the query unverifiable (r13 verdict, item 1:
 clickhouse_uniq_upto_topk). This sweep builds each registry DataFrame
 (schema only — no action beyond what query construction itself runs) and
-reports any top-level ArrayType/MapType/StructType column.
+reports any top-level ArrayType/MapType/StructType column. Exits 1 when
+a column is non-scalar or when any query fails to build.
 
 Usage: python tools/schema_audit.py [sf_dir]
 """
@@ -49,8 +50,12 @@ def main() -> None:
         print(f"{len(bad)} non-scalar final columns:")
         for name, col, typ in bad:
             print(f"NONSCALAR {name}.{col}: {typ}")
+    else:
+        print("no non-scalar final columns")
+    # A query that fails to build is unaudited: fail as loudly as a
+    # non-scalar column does.
+    if bad or errs:
         sys.exit(1)
-    print("no non-scalar final columns")
 
 
 if __name__ == "__main__":
