@@ -1,5 +1,7 @@
-"""The reference's 9 Prometheus collectors (metrics.go:8-70) as DataFrame
-aggregates over the annotated event table (A1-A9 in SURVEY §2.1).
+"""The reference's 9 Prometheus collectors (metrics.go:8-70) over a bounded
+log: every counted line becomes one tagged row, the same rows the streaming
+session fold emits (``streaming/session_state.fold_events``), so batch and
+streaming share one merge (``PrometheusSnapshotSink``'s grouped aggregate).
 
 Counters observe per *line* (not per session), exactly where the reference
 calls ``.Inc()`` / ``.Observe()``:
@@ -11,10 +13,6 @@ calls ``.Inc()`` / ``.Observe()``:
   dt − session start (query.go:226-228) — observed for INSERTs too, since
   the observe precedes the FullInfo check (query.go:228 vs :231).
 - A6-A9: each found+fully-converted stats line (query.go:183-186).
-
-Each snapshot is a handful of small hash aggregates; in streaming these same
-expressions run in update mode, giving Prometheus's monotone accumulation
-across micro-batches without recomputation.
 """
 
 from __future__ import annotations
@@ -22,14 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.histogram import (
-    BYTES_PER_SEC_BUCKETS,
-    BYTES_READ_BUCKETS,
-    QUERY_TIME_BUCKETS,
-    ROWS_PER_SEC_BUCKETS,
-    ROWS_READ_BUCKETS,
-    prometheus_histogram,
-)
 from .correlate import annotate_events
 
 
@@ -70,48 +60,35 @@ def observed_line_counters(parsed: DataFrame):
 
 
 def metric_snapshot(raw_lines: DataFrame, parsed: DataFrame) -> dict[str, DataFrame]:
-    """Compute all 9 collectors. ``raw_lines`` is the unfiltered source
-    (for A1); ``parsed`` is ``parse_log_lines`` output."""
-    ev = annotate_events(parsed).cache()
+    """The inputs of all 9 collectors. ``raw_lines`` is the unfiltered
+    source (for A1); ``parsed`` is ``parse_log_lines`` output.
 
-    read_lines = raw_lines.agg(F.count(F.lit(1)).alias("n"))
-
-    exporter_errors = (
-        ev.filter(F.col("err_type").isNotNull()).groupBy("err_type").agg(F.count(F.lit(1)).alias("n"))
+    Returns ``chlogexporter_read_lines`` (one row, ``n``) and ``events``:
+    one row per parsed line in the session fold's output shape —
+    ``row_type`` (``err`` | ``obs_initial`` | ``obs_error`` | ``obs_time``
+    | ``obs_stats``), ``err_type``, ``obs_label`` (the session's statement
+    type on the labelled observations), ``error_code``, ``elapsed`` and the
+    four stats values. ``PrometheusSnapshotSink.load_metric_frames`` merges
+    them."""
+    ev = annotate_events(parsed)
+    row_type = (
+        F.when(F.col("err_type").isNotNull(), "err")
+        .when(F.col("is_session_line"), "obs_initial")
+        .when(F.col("error_valid"), "obs_error")
+        .when(F.col("memory_valid"), "obs_time")
+        .when(F.col("stats_valid"), "obs_stats")
     )
-
-    query_count = (
-        ev.filter(F.col("is_session_line")).groupBy(F.col("stmt_type").alias("type")).agg(F.count(F.lit(1)).alias("n"))
+    labelled = F.col("is_session_line") | F.col("error_valid") | F.col("memory_valid")
+    elapsed = (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("session_start_ts"))) / 1e6
+    events = ev.select(
+        row_type.alias("row_type"),
+        "err_type",
+        F.when(labelled, F.col("session_stmt")).alias("obs_label"),
+        F.when(F.col("error_valid"), F.col("error_code")).alias("error_code"),
+        F.when(F.col("memory_valid"), elapsed).alias("elapsed"),
+        "rows_read", "bytes_read", "rps", "speed",
     )
-
-    query_errors = (
-        ev.filter(F.col("error_valid"))
-        .groupBy(F.col("session_stmt").alias("type"), F.col("error_code").alias("code"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-    mem = ev.filter(F.col("memory_valid")).withColumn(
-        "elapsed",
-        (F.unix_micros(F.col("ts")) - F.unix_micros(F.col("session_start_ts"))) / 1e6,
-    )
-    query_time = prometheus_histogram(mem, "elapsed", QUERY_TIME_BUCKETS, ["session_stmt"]).withColumnRenamed(
-        "session_stmt", "type"
-    )
-
-    stats = ev.filter(F.col("stats_valid"))
-    rows_read = prometheus_histogram(stats, "rows_read", ROWS_READ_BUCKETS)
-    bytes_read = prometheus_histogram(stats, "bytes_read", BYTES_READ_BUCKETS)
-    rows_per_sec = prometheus_histogram(stats, "rps", ROWS_PER_SEC_BUCKETS)
-    bytes_per_sec = prometheus_histogram(stats, "speed", BYTES_PER_SEC_BUCKETS)
-
     return {
-        "chlogexporter_read_lines": read_lines,
-        "chlogexporter_errors": exporter_errors,
-        "clickhouse_query_count": query_count,
-        "clickhouse_query_errors": query_errors,
-        "clickhouse_query_time": query_time,
-        "clickhouse_select_query_rows_read": rows_read,
-        "clickhouse_select_query_bytes_read": bytes_read,
-        "clickhouse_select_query_rows_per_second": rows_per_sec,
-        "clickhouse_select_query_bytes_per_second": bytes_per_sec,
+        "chlogexporter_read_lines": raw_lines.agg(F.count(F.lit(1)).alias("n")),
+        "events": events,
     }

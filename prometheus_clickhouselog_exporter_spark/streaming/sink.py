@@ -1,12 +1,15 @@
 """Prometheus-style sink (reference K1, main.go:55-68 + metrics.go).
 
 The reference exposes monotone counters/histograms via a pull endpoint.
-Here each micro-batch is reduced IN SPARK by ONE grouped aggregate (one
-Spark job) to a row per (row_type, err_type, obs_label, error_code) that
-carries the row count and every histogram's bucket/count/sum deltas. Only
-those few rows reach the driver, which routes each by its row_type into a
-monotone snapshot — the same accumulate-forever semantics promhttp serves,
-with per-batch cost independent of batch size and of the collector count.
+Every collector here is fed from one row shape: the session fold's tagged
+rows in streaming (``session_state.fold_events``) and the same rows from
+``operators.metrics.metric_snapshot`` in batch. One merge serves both: ONE
+grouped aggregate (one Spark job) reduces the rows to one per (row_type,
+err_type, obs_label, error_code) carrying the row count and every
+histogram's bucket/count/sum deltas. Only those few rows reach the driver,
+which routes each by its row_type into a monotone snapshot — the same
+accumulate-forever semantics promhttp serves, with a cost per merge
+independent of the row count and of the collector count.
 
 ``render_exposition()`` emits the Prometheus text format so the snapshot
 can be served by any HTTP server (a real deployment would put this behind
@@ -27,7 +30,6 @@ from ..functions.histogram import (
     QUERY_TIME_BUCKETS,
     ROWS_PER_SEC_BUCKETS,
     ROWS_READ_BUCKETS,
-    _le_name,
 )
 
 _HISTOGRAMS = {
@@ -48,7 +50,8 @@ class _Hist:
 
 
 class PrometheusSnapshotSink:
-    """foreachBatch target for the sessionized output stream.
+    """foreachBatch target for the sessionized output stream, and the
+    snapshot the CLI's --batch path loads (``load_metric_frames``).
 
     ``session_parquet_path``: optional parquet directory where completed
     session records are appended per batch — the downstream-publish hook
@@ -63,8 +66,11 @@ class PrometheusSnapshotSink:
         self.exporter_errors: dict[str, int] = defaultdict(int)
         self.query_count: dict[str, int] = defaultdict(int)
         self.query_errors: dict[tuple[str, str], int] = defaultdict(int)
+        # The unlabelled histograms (A6-A9) exist from the first scrape, as
+        # client_golang exposes a registered plain Histogram at zero.
         self.histograms: dict[str, dict[str, _Hist]] = {
-            name: {} for name in _HISTOGRAMS
+            name: {} if labelled else {"": _Hist(buckets)}
+            for name, (_, buckets, _, labelled) in _HISTOGRAMS.items()
         }
         self.sessions = 0
         self.timeouts = 0
@@ -72,54 +78,22 @@ class PrometheusSnapshotSink:
     # -- streaming hooks ----------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Merge one micro-batch of session/obs/err rows into the snapshot.
-
-        One Spark action: a groupBy over the four label columns carries
-        ``count(1)`` plus, per histogram, cumulative bucket sums,
-        ``count(v)`` and ``sum(v)``. Each returned row is routed on the
-        driver by its row_type. The batch is cached only when the parquet
-        append reads it a second time.
-        """
-        aggs = [F.count(F.lit(1)).alias("n")]
-        for name, (col, buckets, _, _) in _HISTOGRAMS.items():
-            v = F.col(col).cast("double")
-            aggs += [F.count_if(v <= float(b)).alias(f"{name}_b{i}") for i, b in enumerate(buckets)]
-            aggs += [F.count(v).alias(f"{name}_cnt"), F.sum(v).alias(f"{name}_sum")]
+        """Merge one micro-batch of session/obs/err rows into the snapshot
+        and append its completed sessions to ``session_parquet_path``. The
+        batch is cached only when that append reads it a second time."""
         path = self.session_parquet_path
         if path:
             batch_df = batch_df.cache()
         try:
-            keys = ("row_type", "err_type", "obs_label", "error_code")
-            rows = batch_df.groupBy(*keys).agg(*aggs).collect()
+            rows = self._aggregate(batch_df)
             if path and any(r["row_type"] == "session" for r in rows):
                 (batch_df.filter(F.col("row_type") == "session")
                  .drop("row_type", "err_type", "obs_label").write.mode("append").parquet(path))
         finally:
             if path:
                 batch_df.unpersist()
-
         with self._lock:
-            for r in rows:
-                row_type, n = r["row_type"], r["n"]
-                if row_type == "err":
-                    self.exporter_errors[r["err_type"]] += n
-                elif row_type == "obs_initial":
-                    self.query_count[r["obs_label"]] += n
-                elif row_type == "obs_error":
-                    self.query_errors[(r["obs_label"], str(r["error_code"]))] += n
-                elif row_type == "session":
-                    self.sessions += n
-                elif row_type == "timeout_evict":
-                    self.timeouts += n
-                for name, (_, buckets, hist_row_type, labelled) in _HISTOGRAMS.items():
-                    if row_type != hist_row_type:
-                        continue
-                    label = r["obs_label"] if labelled else ""
-                    h = self.histograms[name].setdefault(label, _Hist(buckets))
-                    for i, b in enumerate(h.buckets):
-                        h.counts[b] += r[f"{name}_b{i}"]
-                    h.total += r[f"{name}_cnt"]
-                    h.sum += r[f"{name}_sum"] or 0.0
+            self._route(rows)
 
     def count_lines_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """A1 read_lines (main.go:119): counts raw source lines per batch."""
@@ -127,27 +101,58 @@ class PrometheusSnapshotSink:
         with self._lock:
             self.read_lines += n
 
-    # -- exposition ---------------------------------------------------------
+    # -- batch load ---------------------------------------------------------
 
     def load_metric_frames(self, frames: dict) -> None:
-        """Populate the snapshot from `operators.metrics.metric_snapshot`
-        DataFrames (batch mode — the CLI's --batch path)."""
+        """Merge `operators.metrics.metric_snapshot` frames (batch mode —
+        the CLI's --batch path): the tagged ``events`` through the same
+        aggregate as a micro-batch, plus the read-lines count."""
+        rows = self._aggregate(frames["events"])
+        n = frames["chlogexporter_read_lines"].collect()[0]["n"]
         with self._lock:
-            self.read_lines += frames["chlogexporter_read_lines"].collect()[0]["n"]
-            for r in frames["chlogexporter_errors"].collect():
-                self.exporter_errors[r["err_type"]] += r["n"]
-            for r in frames["clickhouse_query_count"].collect():
-                self.query_count[r["type"]] += r["n"]
-            for r in frames["clickhouse_query_errors"].collect():
-                self.query_errors[(r["type"], str(r["code"]))] += r["n"]
-            for name, (col, buckets, _, labelled) in _HISTOGRAMS.items():
-                for r in frames[name].collect():
-                    label = r["type"] if labelled else ""
-                    h = self.histograms[name].setdefault(label, _Hist(buckets))
-                    for b in h.buckets:
-                        h.counts[b] += r[_le_name(b)]
-                    h.total += r["bucket_count"]
-                    h.sum += r["bucket_sum"] or 0.0
+            self.read_lines += n
+            self._route(rows)
+
+    # -- the one merge ------------------------------------------------------
+
+    @staticmethod
+    def _aggregate(df: DataFrame) -> list:
+        """One Spark action: a groupBy over the four label columns carries
+        ``count(1)`` plus, per histogram, cumulative bucket sums,
+        ``count(v)`` and ``sum(v)``."""
+        aggs = [F.count(F.lit(1)).alias("n")]
+        for name, (col, buckets, _, _) in _HISTOGRAMS.items():
+            v = F.col(col).cast("double")
+            aggs += [F.count_if(v <= float(b)).alias(f"{name}_b{i}") for i, b in enumerate(buckets)]
+            aggs += [F.count(v).alias(f"{name}_cnt"), F.sum(v).alias(f"{name}_sum")]
+        return df.groupBy("row_type", "err_type", "obs_label", "error_code").agg(*aggs).collect()
+
+    def _route(self, rows: list) -> None:
+        """Add each aggregated row to the collectors its row_type feeds.
+        The caller holds ``_lock``."""
+        for r in rows:
+            row_type, n = r["row_type"], r["n"]
+            if row_type == "err":
+                self.exporter_errors[r["err_type"]] += n
+            elif row_type == "obs_initial":
+                self.query_count[r["obs_label"]] += n
+            elif row_type == "obs_error":
+                self.query_errors[(r["obs_label"], str(r["error_code"]))] += n
+            elif row_type == "session":
+                self.sessions += n
+            elif row_type == "timeout_evict":
+                self.timeouts += n
+            for name, (_, buckets, hist_row_type, labelled) in _HISTOGRAMS.items():
+                if row_type != hist_row_type:
+                    continue
+                label = r["obs_label"] if labelled else ""
+                h = self.histograms[name].setdefault(label, _Hist(buckets))
+                for i, b in enumerate(h.buckets):
+                    h.counts[b] += r[f"{name}_b{i}"]
+                h.total += r[f"{name}_cnt"]
+                h.sum += r[f"{name}_sum"] or 0.0
+
+    # -- exposition ---------------------------------------------------------
 
     def render_exposition(self) -> str:
         """Prometheus text format, mirroring metrics.go collector names."""

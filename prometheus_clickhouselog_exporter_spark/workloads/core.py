@@ -1,6 +1,6 @@
 """Registration machinery for driver-facing queries.
 
-Contract (driver, /root/repo/__spark_entry__.py): each query is
+Contract (driver, ``__spark_entry__.py`` at the repository root): each query is
 ``(spark, sf_dir) -> DataFrame``; the oracle is ANSI SQL DuckDB runs over
 the same parquet registered as views. Column names are part of the
 contract — the driver sorts columns by name before hashing — so every

@@ -493,14 +493,34 @@ def growth_streak_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tests lower it to exercise the arm on the small fixtures.
 _ICWS_DOCS = 200_000
 
-# Session-scoped dense-arm profile broadcast, keyed on corpus provenance
-# (ADVICE r13 #2): every query BUILD used to collect and re-broadcast the
-# (n_docs × |V|) int64 profile matrix and never destroy it — bench builds
-# each query 3× (warm-up + 2 timed passes), leaking ~n_docs·|V|·8 bytes
-# per build for the session lifetime. One broadcast per corpus, same
-# invalidation discipline as the ANN _TRAIN_CACHE (file provenance in the
-# key catches in-place rewrites of the source parquet).
+# Dense-arm profile broadcast per (Spark application, corpus provenance)
+# (ADVICE r13 #2, r14 #1): every query BUILD used to collect and
+# re-broadcast the (n_docs × |V|) int64 profile matrix and never destroy
+# it — bench builds each query 3× (warm-up + 2 timed passes), leaking
+# ~n_docs·|V|·8 bytes per build for the session lifetime. One broadcast per
+# corpus; file provenance in the key catches in-place rewrites of the
+# source parquet, the application id a session restarted in this process.
 _DENSE_BC: dict[tuple, object] = {}
+
+
+def _dense_broadcast(spark: SparkSession, corpus: tuple, build):
+    """The ``_DENSE_BC`` broadcast of ``build()`` for ``corpus`` (a
+    ``core.corpus_key``) in this Spark application. Entries it supersedes
+    for the same table go: this application's (stale provenance) are
+    destroyed; another application's are only dropped. Their blocks died
+    with that SparkContext, and a new context numbers broadcasts from 0
+    again, so destroy() on one would delete the live broadcast that now
+    has its id."""
+    app = spark.sparkContext.applicationId
+    key = (app, *corpus)
+    bc = _DENSE_BC.get(key)
+    if bc is None:
+        for old in [k for k in _DENSE_BC if k[1:3] == key[1:3]]:
+            stale = _DENSE_BC.pop(old)
+            if old[0] == app:
+                stale.destroy()
+        bc = _DENSE_BC[key] = spark.sparkContext.broadcast(build())
+    return bc
 
 
 @query(
@@ -669,9 +689,7 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         from .core import corpus_key
 
-        bk = corpus_key(sf_dir, "documents")
-        bc = _DENSE_BC.get(bk)
-        if bc is None:
+        def profiles():
             rows = prof.select("doc_id", "v", "t").collect()
             all_ids = np.fromiter((r["doc_id"] for r in rows), dtype=np.int64)
             all_t = np.fromiter((r["t"] for r in rows), dtype=np.int64)
@@ -680,8 +698,9 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if rows
                 else np.zeros((0, n_vocab), dtype=np.int64)
             )
-            bc = spark.sparkContext.broadcast((all_ids, all_t, all_v))
-            _DENSE_BC[bk] = bc
+            return all_ids, all_t, all_v
+
+        bc = _dense_broadcast(spark, corpus_key(sf_dir, "documents"), profiles)
 
         def pair_blocks(batches):
             import pandas as pd

@@ -3,6 +3,7 @@ from __future__ import annotations
 import importlib.util
 import os
 import sys
+import time
 
 import pytest
 
@@ -48,6 +49,18 @@ def fixture_log(tmp_path_factory):
     path = tmp_path_factory.mktemp("logs") / "clickhouse-server.log"
     standard_corpus().write(str(path))
     return str(path)
+
+
+def jobs_of(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs on this thread."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def write_events_parquet(path, rows):

@@ -144,3 +144,40 @@ def test_documents_backed_corpus_keys_on_documents(spark, tmp_path):
     assert d3 != d1 and len(builds) == 2, (
         "documents rewrite must rebuild the documents-backed corpus"
     )
+
+
+class _FakeBroadcast:
+    destroyed = False
+
+    def destroy(self) -> None:
+        self.destroyed = True
+
+
+def test_dense_broadcast_memo_keys_on_the_application(spark):
+    """ADVICE r14 #1: the weighted-Jaccard dense-arm broadcast is memoized
+    per Spark application. An entry left by another application (a session
+    stopped and restarted in this process) is never reused; it is dropped
+    without destroy(), which would reach the live context. This
+    application's entry for a stale provenance is destroyed."""
+    from prometheus_clickhouselog_exporter_spark.workloads import relational10 as r10
+
+    app = spark.sparkContext.applicationId
+    corpus = ("documents", "/sf", (("documents.parquet", 2, 10),))
+    other_app, stale = _FakeBroadcast(), _FakeBroadcast()
+    saved = dict(r10._DENSE_BC)
+    r10._DENSE_BC.clear()
+    bc = None
+    try:
+        r10._DENSE_BC[("local-gone", *corpus)] = other_app
+        r10._DENSE_BC[(app, "documents", "/sf", (("documents.parquet", 1, 10),))] = stale
+        r10._DENSE_BC[(app, "documents", "/other", ())] = kept = _FakeBroadcast()
+        bc = r10._dense_broadcast(spark, corpus, lambda: (1, 2))
+        assert bc is not other_app and bc.value == (1, 2)
+        assert stale.destroyed and not other_app.destroyed and not kept.destroyed
+        assert set(r10._DENSE_BC) == {(app, *corpus), (app, "documents", "/other", ())}
+        assert r10._dense_broadcast(spark, corpus, lambda: 1 / 0) is bc  # hit: no rebuild
+    finally:
+        if bc is not None:
+            bc.destroy()
+        r10._DENSE_BC.clear()
+        r10._DENSE_BC.update(saved)

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import urllib.request
@@ -10,12 +11,15 @@ import urllib.request
 from prometheus_clickhouselog_exporter_spark.streaming.sink import PrometheusSnapshotSink
 from prometheus_clickhouselog_exporter_spark.__main__ import make_metrics_server
 
+# The checkout under test: ``python -m`` imports the package from its cwd.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_cli_batch_mode(fixture_log, tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "prometheus_clickhouselog_exporter_spark",
          fixture_log, "--batch", "--sink-path", str(tmp_path / "sessions")],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     text = out.stdout

@@ -5,13 +5,23 @@ Expected values are hand-computed from sources/fixtures.py."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pytest
+from conftest import jobs_of
 from pyspark.sql import functions as F
 
 from prometheus_clickhouselog_exporter_spark.operators.correlate import correlate_batch, error_counts
 from prometheus_clickhouselog_exporter_spark.operators.metrics import metric_snapshot
 from prometheus_clickhouselog_exporter_spark.operators.parsing import parse_log_lines
+from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
+    FixtureLog,
+    initial_line,
+    memory_line,
+    standard_corpus,
+)
 from prometheus_clickhouselog_exporter_spark.sources.logsource import read_log_batch
+from prometheus_clickhouselog_exporter_spark.streaming.sink import PrometheusSnapshotSink
 
 
 @pytest.fixture(scope="module")
@@ -102,27 +112,83 @@ def test_error_counts(parsed):
     assert got == {"duplicated_initial_query": 1, "convert": 1, "not_found_query": 3}
 
 
+def _load(raw, parsed) -> PrometheusSnapshotSink:
+    sink = PrometheusSnapshotSink()
+    sink.load_metric_frames(metric_snapshot(raw, parsed))
+    return sink
+
+
 def test_metric_snapshot(raw, parsed):
-    m = metric_snapshot(raw, parsed)
+    sink = _load(raw, parsed)
 
-    assert m["chlogexporter_read_lines"].collect()[0]["n"] == 52
+    assert sink.read_lines == 52
+    assert dict(sink.query_count) == {"select": 12, "insert": 1, "update": 1, "delete": 1, "other": 1}
+    assert dict(sink.query_errors) == {("select", "60"): 1, ("select", "47"): 1}
 
-    counts = {r["type"]: r["n"] for r in m["clickhouse_query_count"].collect()}
-    assert counts == {"select": 12, "insert": 1, "update": 1, "delete": 1, "other": 1}
-
-    qerr = {(r["type"], r["code"]): r["n"] for r in m["clickhouse_query_errors"].collect()}
-    assert qerr == {("select", 60): 1, ("select", 47): 1}
-
-    qt = {r["type"]: r for r in m["clickhouse_query_time"].collect()}
+    qt = sink.histograms["clickhouse_query_time"]
     # observed per memory line, INSERT included (observe precedes FullInfo check)
-    assert qt["select"]["bucket_count"] == 10
-    assert qt["insert"]["bucket_count"] == 1
-    assert qt["select"]["le_1"] == 1  # only q-errmem's 0.2s
-    assert qt["select"]["le_5"] == 10
+    assert qt["select"].total == 10
+    assert qt["insert"].total == 1
+    assert qt["select"].counts[1] == 1  # only q-errmem's 0.2s
+    assert qt["select"].counts[5] == 10
 
-    rr = m["clickhouse_select_query_rows_read"].collect()[0]
-    assert rr["bucket_count"] == 12  # 7 sqls + 5 units; orphan + badstats skipped
-    assert rr["le_1e06"] == 6  # 1M (q-sel) + five 100-row unit lines
+    rr = sink.histograms["clickhouse_select_query_rows_read"][""]
+    assert rr.total == 12  # 7 sqls + 5 units; orphan + badstats skipped
+    assert rr.counts[1e6] == 6  # 1M (q-sel) + five 100-row unit lines
+
+
+def test_load_metric_frames_runs_two_jobs(spark, raw, parsed):
+    """The read-lines count plus the sink's one grouped aggregate, with
+    adaptive execution off so each action is one job."""
+    frames = metric_snapshot(raw, parsed)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert jobs_of(spark, lambda: PrometheusSnapshotSink().load_metric_frames(frames)) == 2
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def test_metric_snapshot_rereads_a_grown_log(spark, tmp_path):
+    """Two batch snapshots of one directory, the second after it gained a
+    second corpus (ids renamed): the second reads the new data, not a
+    cached copy of the first call's events."""
+    log_dir = tmp_path / "logs"
+    log_dir.mkdir()
+    lines = standard_corpus().lines
+    FixtureLog(lines).write(str(log_dir / "a.log"))
+
+    def snapshot():
+        raw = read_log_batch(spark, str(log_dir))
+        parsed = parse_log_lines(raw).cache()
+        try:
+            return _load(raw, parsed)
+        finally:
+            parsed.unpersist()
+
+    first = snapshot()
+    FixtureLog([ln.replace("{q-", "{r-") for ln in lines]).write(str(log_dir / "b.log"))
+    second = snapshot()
+    assert second.read_lines == 2 * first.read_lines == 104
+    assert dict(second.query_count) == {t: 2 * n for t, n in first.query_count.items()}
+    assert dict(second.exporter_errors) == {t: 2 * n for t, n in first.exporter_errors.items()}
+
+
+def test_batch_without_stats_lines(spark, tmp_path):
+    """An initial line and its memory line only: the query is timed and the
+    four unlabelled stats histograms render at zero."""
+    t0, t1 = datetime(2024, 1, 1, 12), datetime(2024, 1, 1, 12, 0, 2)
+    path = str(tmp_path / "clickhouse-server.log")
+    FixtureLog([
+        initial_line(t0, 100, "q-1", "10.0.0.1", 35000, "SELECT 1"),
+        memory_line(t1, 100, "q-1", "1.00 MiB"),
+    ]).write(path)
+    raw = read_log_batch(spark, path)
+    text = _load(raw, parse_log_lines(raw)).render_exposition()
+    assert 'clickhouse_query_time_count{type="select"} 1\n' in text
+    for name in ("rows_read", "bytes_read", "rows_per_second", "bytes_per_second"):
+        assert f'clickhouse_select_query_{name}_bucket{{le="+Inf"}} 0\n' in text
+        assert f"clickhouse_select_query_{name}_sum 0\n" in text
 
 
 def test_observed_line_counters_ride_the_scan(parsed):

@@ -11,7 +11,10 @@ import time
 from datetime import datetime, timedelta
 
 import pytest
+from conftest import jobs_of
 
+from prometheus_clickhouselog_exporter_spark.operators.metrics import metric_snapshot
+from prometheus_clickhouselog_exporter_spark.operators.parsing import parse_log_lines
 from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
     FixtureLog,
     initial_line,
@@ -19,6 +22,7 @@ from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
     standard_corpus,
     stats_line,
 )
+from prometheus_clickhouselog_exporter_spark.sources.logsource import read_log_batch
 from prometheus_clickhouselog_exporter_spark.streaming import (
     SESSION_OUTPUT_SCHEMA,
     PrometheusSnapshotSink,
@@ -75,6 +79,27 @@ def test_full_corpus_streaming_matches_batch_goldens(spark, tmp_path):
     text = sink.render_exposition()
     assert 'chlogexporter_errors{type="not_found_query"} 3' in text
     assert "clickhouse_query_time_bucket" in text
+
+
+def test_batch_and_streaming_expositions_are_identical(spark, tmp_path, fixture_log):
+    """--batch (tagged rows from ``metric_snapshot``) and the live stream
+    (the session fold's rows) go through one merge: same bytes out."""
+    raw = read_log_batch(spark, fixture_log)
+    batch = PrometheusSnapshotSink()
+    batch.load_metric_frames(metric_snapshot(raw, parse_log_lines(raw)))
+    stream = _run(spark, tmp_path, {"00.log": standard_corpus().lines})
+    assert batch.render_exposition() == stream.render_exposition()
+
+
+def test_fresh_sink_exposes_zeroed_unlabelled_histograms():
+    """A6-A9 are plain Histograms registered in init() (metrics.go:47-75):
+    exposed at zero before any observation. A5 is a HistogramVec, so it has
+    no series until a label set is observed."""
+    text = PrometheusSnapshotSink().render_exposition()
+    for name in ("rows_read", "bytes_read", "rows_per_second", "bytes_per_second"):
+        assert f'clickhouse_select_query_{name}_bucket{{le="+Inf"}} 0\n' in text
+        assert f"clickhouse_select_query_{name}_count 0\n" in text
+    assert "clickhouse_query_time_bucket" not in text
 
 
 def test_cross_batch_correlation(spark, tmp_path):
@@ -213,18 +238,6 @@ def _cumulative(h) -> dict:
     return {b: int(h.counts[b]) for b in h.buckets}
 
 
-def _jobs_of(spark, fn) -> int:
-    """Spark jobs submitted while ``fn`` runs on this thread."""
-    sc = spark.sparkContext
-    group = f"sink-jobs-{time.monotonic_ns()}"
-    sc.setJobGroup(group, "count the jobs of one call")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_process_batch_merges_every_row_type_in_one_job(spark):
     """The fused merge on a static batch: exact deltas for every collector
     from one Spark job. Micro-batches run with adaptive execution off (the
@@ -234,9 +247,9 @@ def test_process_batch_merges_every_row_type_in_one_job(spark):
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        assert _jobs_of(spark, lambda: sink.process_batch(df, 0)) == 1
+        assert jobs_of(spark, lambda: sink.process_batch(df, 0)) == 1
         empty = _batch(spark, [])
-        assert _jobs_of(spark, lambda: sink.process_batch(empty, 1)) == 1
+        assert jobs_of(spark, lambda: sink.process_batch(empty, 1)) == 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
