@@ -4,9 +4,10 @@ Reference A5-A9 (metrics.go:39-69): a Prometheus histogram per label set is
 cumulative bucket counts (``le`` bounds), plus ``_sum`` and ``_count``.
 Rendered in Spark as one hash aggregate: ``sum(CASE WHEN v <= b THEN 1 END)``
 per bound — a single shuffle on the label columns, map-side partial
-aggregation for free, no UDAF. The same expression set works in streaming
-update mode, which preserves Prometheus's monotone-accumulation semantics
-across micro-batches (SURVEY §3.3).
+aggregation for free, no UDAF. The library queries use these expressions;
+the exporter itself takes only the bucket bounds below: its sink
+(``streaming/sink.PrometheusSnapshotSink``) folds them into its one grouped
+aggregate per micro-batch or ``--batch`` run.
 """
 
 from __future__ import annotations

@@ -1,11 +1,9 @@
-from .parsing import parse_log_lines, parsed_event_schema
-from .correlate import correlate_batch, error_counts
+from .parsing import parse_log_lines
+from .correlate import correlate_batch
 from .metrics import metric_snapshot
 
 __all__ = [
     "parse_log_lines",
-    "parsed_event_schema",
     "correlate_batch",
-    "error_counts",
     "metric_snapshot",
 ]

@@ -6,8 +6,15 @@ the initial line (query.go:91-130), mutated by stats/memory/error lines
 arrival-order semantics live in the streaming path
 (``streaming/session_state.py``); this module is the *batch* lowering over a
 bounded log, with arrival order approximated by event time (ties broken by
-raw line text) — correct whenever the log's timestamps are monotone per
+the line's hash) — correct whenever the log's timestamps are monotone per
 query ID, which ClickHouse guarantees per query.
+
+``enrich_parsed`` builds the one typed event row all three session
+lowerings read — ``annotate_events`` (the per-line A2-A9 tags),
+``correlate_batch`` (one record per ID) and the streaming fold. It decides
+two things once per line: ``valid`` (every cast on the line's code path
+succeeded) and the arrival-order key ``(ts, line_hash)``. No lowering
+re-derives either, so ``--batch`` and the live stream agree on tied lines.
 
 Semantics preserved exactly (SURVEY §2.1 completion notes):
 - first *valid* initial line wins; later initial lines for the same ID count
@@ -28,10 +35,9 @@ Known batch deviation (documented, fixed in streaming): after eviction the
 reference would treat a RE-USED query ID as a fresh session; batch keeps
 one session per ID over the whole input.
 
-Scale shape: ONE shuffle. The session window partitions by ``id``, and the
-final ``groupBy("id")`` reuses that hash partitioning, so Catalyst plans a
-single exchange. Skewed IDs cannot occur (ClickHouse query IDs are unique);
-AQE handles residual imbalance.
+Scale shape: ONE shuffle each. ``annotate_events``' session window and
+``correlate_batch``'s aggregate partition by ``id``. Skewed IDs cannot
+occur (ClickHouse query IDs are unique); AQE handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -45,56 +51,75 @@ from ..functions.stmt import classify_statement
 
 _INSERT = "insert"
 
+# The event row of ``enrich_parsed``, less ``valid`` (added after the barrier).
+_EVENT_COLS = (
+    "event_kind", "ts", "pid", "id", "host", "port", "query", "rows_read", "rps",
+    "error_code", "error_message", "bytes_read", "speed", "memory_bytes",
+    "stmt_type", "line_hash",
+)
+
 
 def enrich_parsed(parsed: DataFrame) -> DataFrame:
-    """Stateless enrichment shared by batch and streaming: parsed byte
-    quantities (C3) and statement classification (X1). Pure expressions —
-    valid on both bounded and streaming DataFrames.
+    """``parse_log_lines`` output → the one typed event row every session
+    lowering reads (``annotate_events``, ``correlate_batch``, the streaming
+    fold). Pure expressions — valid on bounded and streaming DataFrames.
 
-    One ``withColumns`` call, not four ``withColumn``: every DataFrame op
-    re-walks the whole upstream plan driver-side, and the parse subtree
-    below this point is thousands of expression nodes — call count here is
-    measurable per-query build latency."""
+    Besides the parsed fields it carries ``bytes_read``/``speed``/
+    ``memory_bytes`` (C3 byte parses), ``stmt_type`` (X1), ``line_hash``
+    (xxhash64 of the raw line: with ``ts`` the arrival-order key of every
+    lowering, so the ~100-byte raw line never enters a shuffle, a window
+    buffer or the Arrow boundary) and ``valid``: every cast on the line's
+    reference code path succeeded (query.go:96-116, 150-176, 209-222,
+    255-260) — no ``convert_error``, and the stats line's bytes and speed,
+    or the memory line's bytes, parsed. The raw strings and
+    ``convert_error`` do not leave.
+
+    The projection sits in a Generate BARRIER: the conditional parse trees
+    are referenced by ``valid`` and by downstream predicates and
+    aggregates; without a barrier project collapse inlines them into every
+    reference and CSE cannot dedupe them (conditionals are exempt) —
+    measured ~4× re-evaluation. After the barrier they are plain
+    attributes: the regex work runs once per line, BEFORE any shuffle. One
+    select, not a chain of ``withColumn``s: every DataFrame op re-walks the
+    deep parse plan driver-side."""
     k = F.col("event_kind")
-    return parsed.withColumns(
-        {
-            "bytes_read": F.when(k == "stats", parse_bytes(F.col("bytes_raw"))),
-            "speed": F.when(k == "stats", parse_bytes(F.col("speed_raw"))),
-            "memory_bytes": F.when(k == "memory", parse_bytes(F.col("memory_raw"))),
-            "stmt_type": F.when(k == "initial", classify_statement(F.col("query"))),
-        }
+    typed = F.struct(
+        k, F.col("ts"), F.col("pid"), F.col("id"), F.col("host"), F.col("port"),
+        F.col("query"), F.col("rows_read"), F.col("rps"),
+        F.col("error_code"), F.col("error_message"), F.col("convert_error"),
+        F.when(k == "stats", parse_bytes(F.col("bytes_raw"))).alias("bytes_read"),
+        F.when(k == "stats", parse_bytes(F.col("speed_raw"))).alias("speed"),
+        F.when(k == "memory", parse_bytes(F.col("memory_raw"))).alias("memory_bytes"),
+        F.when(k == "initial", classify_statement(F.col("query"))).alias("stmt_type"),
+        F.xxhash64(F.col("raw_line")).alias("line_hash"),
+    )
+    e = F.col("_e.event_kind")
+    valid = (
+        ~F.col("_e.convert_error")
+        & ((e != "stats") | (F.col("_e.bytes_read").isNotNull() & F.col("_e.speed").isNotNull()))
+        & ((e != "memory") | F.col("_e.memory_bytes").isNotNull())
+    )
+    return parsed.select(F.explode(F.array(typed)).alias("_e")).select(
+        *(f"_e.{c}" for c in _EVENT_COLS), valid.alias("valid")
     )
 
 
 def annotate_events(parsed: DataFrame) -> DataFrame:
-    """Add session context to every parsed event row (one shuffle, by id).
+    """Add session context to every event row of ``enrich_parsed`` (one
+    shuffle, by id).
 
-    Adds: ``bytes_read/speed/memory_bytes`` (parsed byte quantities),
-    ``session_start_ts``/``session_stmt``/``session_exists``,
-    ``is_session_line`` (the winning initial), ``found`` (enrich line has a
-    session at-or-before it), ``stats_valid``/``memory_valid``/
-    ``error_valid`` (all casts for that code path succeeded), ``line_hash``
-    (xxhash64 of the raw line, the arrival-order tiebreak), and
-    ``err_type`` — the A4 internal-error label for this line
-    (duplicated_initial_query | convert | not_found_query | NULL).
+    Adds: ``session_start_ts``/``session_stmt``, ``is_session_line`` (the
+    winning initial), ``found`` (enrich line has a session at-or-before
+    it), ``stats_valid``/``memory_valid``/``error_valid`` (a found, valid
+    line of that kind), and ``err_type`` — the A4 internal-error label for
+    this line (duplicated_initial_query | convert | not_found_query | NULL).
     """
     k = F.col("event_kind")
     is_ini = k == "initial"
-    df = enrich_parsed(parsed).withColumn("line_hash", F.xxhash64(F.col("raw_line")))
-    # Generate BARRIER: the enrich columns (parse_bytes ×3, classification)
-    # are referenced by several downstream predicates/aggregates; without a
-    # barrier project collapse inlines the conditional parse trees into
-    # every reference and CSE cannot dedupe them (conditionals are exempt)
-    # — measured ~4× re-evaluation. After the barrier they are plain
-    # attributes: the regex work runs once per line, BEFORE the shuffle,
-    # and the shuffle carries small typed columns instead of re-parsing.
-    df = df.select(F.explode(F.array(F.struct(*df.columns))).alias("_e")).select("_e.*")
+    valid = F.col("valid")
+    df = enrich_parsed(parsed)
 
-    valid_ini = is_ini & ~F.col("convert_error")
-    # Arrival-order proxy: (ts, xxhash64(raw_line)) per id — the hash
-    # tiebreak keeps the ~100-byte raw line out of the shuffle and the
-    # window buffers (it only matters for exact-duplicate timestamps,
-    # where any deterministic order is as faithful as any other).
+    valid_ini = is_ini & valid
     line_h = F.col("line_hash")
     order_key = F.struct(F.col("ts"), line_h.alias("h"))
 
@@ -122,15 +147,9 @@ def annotate_events(parsed: DataFrame) -> DataFrame:
     found = session_exists & (F.col("ts").isNull() | (F.col("ts") >= F.col("session_start_ts")))
     df = df.withColumn("found", F.coalesce(~is_ini & found, F.lit(False)))
 
-    stats_valid = (
-        (k == "stats")
-        & F.col("found")
-        & ~F.col("convert_error")
-        & F.col("bytes_read").isNotNull()
-        & F.col("speed").isNotNull()
-    )
-    memory_valid = (k == "memory") & F.col("found") & ~F.col("convert_error") & F.col("memory_bytes").isNotNull()
-    error_valid = (k == "error") & F.col("found") & ~F.col("convert_error")
+    stats_valid = (k == "stats") & F.col("found") & valid
+    memory_valid = (k == "memory") & F.col("found") & valid
+    error_valid = (k == "error") & F.col("found") & valid
     df = (
         df.withColumn("stats_valid", stats_valid)
         .withColumn("memory_valid", memory_valid)
@@ -141,11 +160,8 @@ def annotate_events(parsed: DataFrame) -> DataFrame:
     dup = is_ini & session_exists & ~F.col("is_session_line") & (order_key > F.col("_session_key"))
     err_type = (
         F.when(dup, "duplicated_initial_query")
-        .when(is_ini & F.col("convert_error"), "convert")
         .when(~is_ini & ~F.col("found"), "not_found_query")
-        .when((k == "stats") & F.col("found") & ~F.col("stats_valid"), "convert")
-        .when((k == "memory") & F.col("found") & ~F.col("memory_valid"), "convert")
-        .when((k == "error") & F.col("found") & F.col("convert_error"), "convert")
+        .when(~valid, "convert")
     )
     return df.withColumn("err_type", err_type).drop("_session_key")
 
@@ -173,40 +189,14 @@ def correlate_batch(parsed: DataFrame) -> DataFrame:
     as found and sort below every non-null ts in the window ordering; a
     second conditional agg per kind preserves exactly that: used only when
     the non-null max is orphan or absent. Initial/memory NULL ts is
-    impossible here (parse marks it convert_error).
+    impossible here (parse marks it a convert error, so not ``valid``).
     """
     k = F.col("event_kind")
-    # One select builds the enrich columns (C3 byte parses, X1
-    # classification), folds raw_line into line_hash, prunes the dead
-    # raw-string columns (elapsed_str — query.go:16 vs :226 — and the
-    # *_raw fields once parsed) so the sort + shuffle rows carry only
-    # typed fields, and wraps it all in a Generate BARRIER (see
-    # annotate_events): the conditional parse trees are each referenced
-    # by an agg condition AND a payload; project collapse would otherwise
-    # inline them per reference (conditionals are CSE-exempt). Built as a
-    # single op because each DataFrame call re-walks the deep parse plan
-    # driver-side (see enrich_parsed).
-    ev = parsed.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("event_kind"), F.col("ts"), F.col("pid"), F.col("id"),
-                    F.col("host"), F.col("port"), F.col("query"),
-                    F.col("rows_read"), F.col("rps"),
-                    F.col("error_code"), F.col("error_message"), F.col("convert_error"),
-                    F.when(k == "stats", parse_bytes(F.col("bytes_raw"))).alias("bytes_read"),
-                    F.when(k == "stats", parse_bytes(F.col("speed_raw"))).alias("speed"),
-                    F.when(k == "memory", parse_bytes(F.col("memory_raw"))).alias("memory_bytes"),
-                    F.when(k == "initial", classify_statement(F.col("query"))).alias("stmt_type"),
-                    F.xxhash64(F.col("raw_line")).alias("line_hash"),
-                )
-            )
-        ).alias("_e")
-    ).select("_e.*")
+    ev = enrich_parsed(parsed)
 
     h = F.col("line_hash")
-    ok = ~F.col("convert_error")
-    sta_ok = (k == "stats") & ok & F.col("bytes_read").isNotNull() & F.col("speed").isNotNull()
+    ok = F.col("valid")
+    sta_ok = (k == "stats") & ok
     err_ok = (k == "error") & ok
     tsn = F.col("ts").isNotNull()
 
@@ -232,7 +222,7 @@ def correlate_batch(parsed: DataFrame) -> DataFrame:
         )
     ).alias("_sta_u")
     mem = F.max(
-        F.when((k == "memory") & ok & F.col("memory_bytes").isNotNull(), F.struct(F.col("ts"), h.alias("h"), F.col("memory_bytes")))
+        F.when((k == "memory") & ok, F.struct(F.col("ts"), h.alias("h"), F.col("memory_bytes")))
     ).alias("_mem")
     err = F.max(
         F.when(err_ok & tsn, F.struct(F.col("ts"), h.alias("h"), F.col("error_code"), F.col("error_message")))
@@ -251,7 +241,6 @@ def correlate_batch(parsed: DataFrame) -> DataFrame:
     sta_found = F.col("_sta").isNotNull() & (F.col("_sta.ts") >= start)
     mem_found = F.col("_mem").isNotNull() & (F.col("_mem.ts") >= start)
     err_found = F.col("_err").isNotNull() & (F.col("_err.ts") >= start)
-    sta_any = sta_found | F.col("_sta_u").isNotNull()
     err_any = err_found | F.col("_err_u").isNotNull()
 
     def pick(found: Column, n: str, field: str) -> Column:
@@ -277,18 +266,4 @@ def correlate_batch(parsed: DataFrame) -> DataFrame:
         pick(err_found, "err", "error_message").alias("error_message"),
         F.when(mem_found, elapsed).alias("elapsed"),
         (mem_found & (F.col("_ini.stmt_type") != _INSERT)).alias("full_info"),
-    )
-
-
-def error_counts(parsed: DataFrame) -> DataFrame:
-    """A4: internal-error counter by type (metrics.go:8-14).
-
-    ``tail_line`` (tail read errors, main.go:114) has no Spark analog — the
-    file source either reads a line or fails the task — so it never appears.
-    """
-    return (
-        annotate_events(parsed)
-        .filter(F.col("err_type").isNotNull())
-        .groupBy(F.col("err_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
     )

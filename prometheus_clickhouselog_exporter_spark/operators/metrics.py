@@ -8,7 +8,10 @@ calls ``.Inc()`` / ``.Observe()``:
 - A1 read_lines: every input line, before any filtering (main.go:119).
 - A2 query_count{type}: each non-duplicate valid initial (query.go:127).
 - A3 query_errors{type,code}: each found error line (query.go:262).
-- A4 chlogexporter_errors{type}: see ``correlate.error_counts``.
+- A4 chlogexporter_errors{type}: each line's ``err_type`` from
+  ``correlate.annotate_events`` (duplicated_initial_query | convert |
+  not_found_query). ``tail_line`` (tail read errors, main.go:114) has no
+  Spark analog: the file source either reads a line or fails the task.
 - A5 query_time{type}: each found+valid memory line, elapsed = that line's
   dt − session start (query.go:226-228) — observed for INSERTs too, since
   the observe precedes the FullInfo check (query.go:228 vs :231).

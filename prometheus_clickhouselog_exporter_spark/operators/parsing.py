@@ -18,8 +18,8 @@ text.)
 Failure semantics (reference contract, query.go:96-116): a line that matches
 a shape but fails a cast yields NULL in the typed column and
 ``convert_error = true`` — counted downstream, never thrown. Lines matching
-no shape get ``event_kind`` NULL and are dropped by the pipeline (silently,
-as in query.go:77) while still being counted by A1 ``read_lines``.
+no shape are dropped here (silently, as in query.go:77) while still being
+counted by A1 ``read_lines``.
 """
 
 from __future__ import annotations
@@ -84,11 +84,11 @@ def coarse_filter(df: DataFrame, line_col: str = "value") -> DataFrame:
     return df.filter(c.contains("Debug") | c.contains("Information") | c.contains("Error"))
 
 
-def parse_log_lines(df: DataFrame, line_col: str = "value", keep_unmatched: bool = False) -> DataFrame:
+def parse_log_lines(df: DataFrame, line_col: str = "value") -> DataFrame:
     """Raw log lines → typed event rows (F1+F2+P1-P4+C1+C2).
 
     Output schema (NULL where the shape lacks the field or a cast failed):
-      event_kind  string  initial|stats|memory|error (NULL = no shape matched)
+      event_kind  string  initial|stats|memory|error
       ts          timestamp
       pid         long
       id          string
@@ -164,9 +164,7 @@ def parse_log_lines(df: DataFrame, line_col: str = "value", keep_unmatched: bool
     )
     parsed = pre.select(
         F.explode(F.array(g_struct)).alias("_g"), F.col("raw_line")
-    )
-    if not keep_unmatched:
-        parsed = parsed.filter(F.col("_g.kind").isNotNull())
+    ).filter(F.col("_g.kind").isNotNull())
 
     kind = F.col("_g.kind")
 
@@ -212,13 +210,3 @@ def parse_log_lines(df: DataFrame, line_col: str = "value", keep_unmatched: bool
     )
     return out.withColumn("convert_error", F.coalesce(convert_error, F.lit(False)))
 
-
-def parsed_event_schema() -> str:
-    """DDL string of `parse_log_lines` output (for streaming readers)."""
-    return (
-        "event_kind string, ts timestamp, pid bigint, id string, host string, "
-        "port bigint, query string, rows_read bigint, bytes_raw string, "
-        "elapsed_str string, rps bigint, speed_raw string, memory_raw string, "
-        "error_code bigint, error_message string, raw_line string, "
-        "convert_error boolean"
-    )

@@ -3,7 +3,8 @@ as Structured Streaming):
 
     text file source over the log directory (S1/S2, rotation-safe)
       → coarse filter + regex parse (F1/F2/P1-P4, shared with batch)
-      → stateless enrich (C3 byte parse, X1 classification)
+      → the typed event row (C3 byte parse, X1 classification, cast
+        verdict, arrival-order hash; ``correlate.enrich_parsed``)
       → stateful sessionization by query id (ST1-ST5 + timeout)
       → foreachBatch Prometheus snapshot sink (K1/A1-A9)
 
@@ -33,6 +34,13 @@ from .sink import PrometheusSnapshotSink
 
 # Longest stop() waits for a running session trigger to finish.
 _STOP_WAIT_S = 20.0
+
+# Micro-batch interval of the live tail. Without a bound, any pending
+# processing-time state timer makes the engine run no-data batches
+# back-to-back (observed: hundreds of empty batches per minute, each
+# writing a state-store version) — a pure CPU/IO burn. One-second
+# triggers keep metric latency negligible and batch count sane.
+_TRIGGER_INTERVAL = "1 second"
 
 
 @dataclass
@@ -79,14 +87,9 @@ def run_log_pipeline(
     sink: PrometheusSnapshotSink | None = None,
     timeout_ms: int = 0,
     max_files_per_trigger: int | None = None,
-    trigger_interval: str | None = "1 second",
     available_now: bool = False,
 ) -> LogPipeline:
-    """``trigger_interval`` bounds micro-batch frequency. Without it, any
-    pending processing-time state timer makes the engine run no-data
-    batches back-to-back (observed: hundreds of empty batches per minute,
-    each writing a state-store version) — a pure CPU/IO burn. One-second
-    triggers keep metric latency negligible and batch count sane.
+    """The live tail runs one micro-batch per ``_TRIGGER_INTERVAL``.
 
     ``available_now=True`` is the BOUNDED-drain mode (fidelity harness,
     replay-then-exit jobs): Trigger.AvailableNow processes the whole
@@ -116,9 +119,9 @@ def run_log_pipeline(
     if available_now:
         sessions_writer = sessions_writer.trigger(availableNow=True)
         lines_writer = lines_writer.trigger(availableNow=True)
-    elif trigger_interval:
-        sessions_writer = sessions_writer.trigger(processingTime=trigger_interval)
-        lines_writer = lines_writer.trigger(processingTime=trigger_interval)
+    else:
+        sessions_writer = sessions_writer.trigger(processingTime=_TRIGGER_INTERVAL)
+        lines_writer = lines_writer.trigger(processingTime=_TRIGGER_INTERVAL)
     return LogPipeline(
         sessions_writer.start(), lines_writer.start(), sink, available_now
     )

@@ -28,10 +28,10 @@ Scale: state is partitioned by query ID across executors (RocksDB-backed
 state store on a real cluster), so active-session memory is per-executor
 O(active/executors); the timeout bounds it absolutely.
 
-Arrival order: within a micro-batch, events are folded in (ts, raw_line)
-order — ClickHouse timestamps are monotone per query. Cross-batch disorder
-degrades exactly as the reference does (a stats line before its initial
-counts ``not_found_query``), no buffering is invented.
+Arrival order: within a micro-batch, events are folded in (ts, line_hash)
+order, as in batch — ClickHouse timestamps are monotone per query.
+Cross-batch disorder degrades exactly as the reference does (a stats line
+before its initial counts ``not_found_query``), no buffering is invented.
 """
 
 from __future__ import annotations
@@ -105,11 +105,12 @@ def _none_if_nan(v):
     return v
 
 
-# Columns pulled out of each per-group pandas frame, in tuple order.
+# Columns pulled out of each per-group pandas frame (the event row of
+# ``correlate.enrich_parsed``), in tuple order.
 _EV_COLS = (
-    "event_kind", "convert_error", "host", "port", "pid", "query",
+    "event_kind", "valid", "host", "port", "pid", "query",
     "stmt_type", "rows_read", "bytes_read", "rps", "speed", "memory_bytes",
-    "error_code", "error_message", "raw_line",
+    "error_code", "error_message", "line_hash",
 )
 _NAT = np.iinfo("int64").min  # datetime64 NaT as int64
 
@@ -140,8 +141,8 @@ def rows_from_frames(frames: list[pd.DataFrame]) -> list[tuple]:
     ts_us_arr = ev_df["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
     rows = list(zip(ts_us_arr, *(ev_df[c].to_numpy() for c in _EV_COLS)))
     if len(rows) > 1:
-        # arrival-order proxy: (ts, raw_line), NULL ts last; stable.
-        rows.sort(key=lambda r: (r[0] == _NAT, r[0], r[15] or ""))
+        # arrival-order proxy: (ts, line_hash), NULL ts last, as in batch.
+        rows.sort(key=lambda r: (r[0] == _NAT, r[0], r[15]))
     return rows
 
 
@@ -152,57 +153,46 @@ def fold_events(
     new session). Shared verbatim by the applyInPandasWithState and the
     transformWithStateInPandas renderings, so the two APIs cannot drift."""
     out: list[dict[str, Any]] = []
-    for (tus, kind, conv, host, port, pid, query, stmt, ev_rows, ev_bytes,
-         ev_rps, ev_speed, ev_mem, ev_code, ev_msg, _raw) in rows:
+    for (tus, kind, valid, host, port, pid, query, stmt, ev_rows, ev_bytes,
+         ev_rps, ev_speed, ev_mem, ev_code, ev_msg, _h) in rows:
         ts_us = None if tus == _NAT else int(tus)
-        if kind == "initial":
-            if sess is not None:
-                out.append(_blank("err", qid) | {"err_type": "duplicated_initial_query"})
-            elif conv:
-                out.append(_blank("err", qid) | {"err_type": "convert"})
-            else:
-                # numpy scalars → Python ints so the state tuple matches
-                # the bigint state schema.
-                sess = (
-                    host, int(port), int(pid), query,
-                    stmt, ts_us, None, None, None, None, None, None,
-                    False, None, None,
-                )
-                out.append(_blank("obs_initial", qid) | {"obs_label": stmt})
+        # Error precedence as in ``annotate_events``: the dup check precedes
+        # the cast checks (query.go:91-95), a lookup miss precedes them on
+        # the enrich paths (query.go:190, 237, 270).
+        if kind == "initial" and sess is not None:
+            out.append(_blank("err", qid) | {"err_type": "duplicated_initial_query"})
+        elif kind != "initial" and sess is None:
+            out.append(_blank("err", qid) | {"err_type": "not_found_query"})
+        elif not valid:
+            out.append(_blank("err", qid) | {"err_type": "convert"})
+        elif kind == "initial":
+            # numpy scalars → Python ints so the state tuple matches the
+            # bigint state schema.
+            sess = (
+                host, int(port), int(pid), query,
+                stmt, ts_us, None, None, None, None, None, None,
+                False, None, None,
+            )
+            out.append(_blank("obs_initial", qid) | {"obs_label": stmt})
         elif kind == "stats":
-            if sess is None:
-                out.append(_blank("err", qid) | {"err_type": "not_found_query"})
-            elif conv or pd.isna(ev_bytes) or pd.isna(ev_speed):
-                out.append(_blank("err", qid) | {"err_type": "convert"})
-            else:
-                sess = sess[:6] + (int(ev_rows), int(ev_bytes), int(ev_rps), int(ev_speed)) + sess[10:]
-                d = _blank("obs_stats", qid)
-                d.update(rows_read=int(ev_rows), bytes_read=int(ev_bytes),
-                         rps=int(ev_rps), speed=int(ev_speed))
-                out.append(d)
+            sess = sess[:6] + (int(ev_rows), int(ev_bytes), int(ev_rps), int(ev_speed)) + sess[10:]
+            d = _blank("obs_stats", qid)
+            d.update(rows_read=int(ev_rows), bytes_read=int(ev_bytes),
+                     rps=int(ev_rps), speed=int(ev_speed))
+            out.append(d)
         elif kind == "memory":
-            if sess is None:
-                out.append(_blank("err", qid) | {"err_type": "not_found_query"})
-            elif conv or pd.isna(ev_mem):
-                out.append(_blank("err", qid) | {"err_type": "convert"})
-            else:
-                sess = sess[:10] + (int(ev_mem), ts_us) + sess[12:]
-                elapsed = (ts_us - sess[5]) / 1e6
-                out.append(_blank("obs_time", qid) | {"obs_label": sess[4], "elapsed": elapsed})
-                if sess[4] != "insert":  # FullInfo ⇒ evict (main.go:125-129)
-                    out.append(_session_row("session", qid, sess, True))
-                    sess = None
+            sess = sess[:10] + (int(ev_mem), ts_us) + sess[12:]
+            elapsed = (ts_us - sess[5]) / 1e6
+            out.append(_blank("obs_time", qid) | {"obs_label": sess[4], "elapsed": elapsed})
+            if sess[4] != "insert":  # FullInfo ⇒ evict (main.go:125-129)
+                out.append(_session_row("session", qid, sess, True))
+                sess = None
         elif kind == "error":
-            if sess is None:
-                out.append(_blank("err", qid) | {"err_type": "not_found_query"})
-            elif conv:
-                out.append(_blank("err", qid) | {"err_type": "convert"})
-            else:
-                sess = sess[:12] + (True, int(ev_code), ev_msg)
-                out.append(
-                    _blank("obs_error", qid)
-                    | {"obs_label": sess[4], "error_code": int(ev_code)}
-                )
+            sess = sess[:12] + (True, int(ev_code), ev_msg)
+            out.append(
+                _blank("obs_error", qid)
+                | {"obs_label": sess[4], "error_code": int(ev_code)}
+            )
     return out, sess
 
 

@@ -11,7 +11,7 @@ import pytest
 from conftest import jobs_of
 from pyspark.sql import functions as F
 
-from prometheus_clickhouselog_exporter_spark.operators.correlate import correlate_batch, error_counts
+from prometheus_clickhouselog_exporter_spark.operators.correlate import correlate_batch, enrich_parsed
 from prometheus_clickhouselog_exporter_spark.operators.metrics import metric_snapshot
 from prometheus_clickhouselog_exporter_spark.operators.parsing import parse_log_lines
 from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
@@ -107,9 +107,15 @@ def test_correlate_plan_shape(parsed):
     assert plan.count("Exchange") <= 2  # agg exchange (+1 AQE artifact max)
 
 
-def test_error_counts(parsed):
-    got = {r["err_type"]: r["n"] for r in error_counts(parsed).collect()}
-    assert got == {"duplicated_initial_query": 1, "convert": 1, "not_found_query": 3}
+def test_event_row_contract(parsed):
+    """``enrich_parsed`` is the one typed event row: no raw-string or
+    convert_error column leaves it, and ``valid`` carries the cast verdict
+    — False only on q-badstats' stats line (7.63 XiQ)."""
+    ev = enrich_parsed(parsed)
+    dropped = {"raw_line", "bytes_raw", "speed_raw", "memory_raw", "elapsed_str", "convert_error"}
+    assert not dropped & set(ev.columns)
+    bad = ev.filter(~F.col("valid")).select("id", "event_kind").collect()
+    assert [tuple(r) for r in bad] == [("q-badstats", "stats")]
 
 
 def _load(raw, parsed) -> PrometheusSnapshotSink:
@@ -124,6 +130,7 @@ def test_metric_snapshot(raw, parsed):
     assert sink.read_lines == 52
     assert dict(sink.query_count) == {"select": 12, "insert": 1, "update": 1, "delete": 1, "other": 1}
     assert dict(sink.query_errors) == {("select", "60"): 1, ("select", "47"): 1}
+    assert dict(sink.exporter_errors) == {"duplicated_initial_query": 1, "convert": 1, "not_found_query": 3}
 
     qt = sink.histograms["clickhouse_query_time"]
     # observed per memory line, INSERT included (observe precedes FullInfo check)

@@ -75,9 +75,9 @@ def ev_frame(*events):
     for ts_us, kind, over in events:
         base = dict.fromkeys(_EV_COLS)
         base.update(
-            event_kind=kind, convert_error=False, host="10.0.0.1", port=9000,
+            event_kind=kind, valid=True, host="10.0.0.1", port=9000,
             pid=7, query="SELECT count() FROM hits", stmt_type="select",
-            raw_line=f"L{ts_us}",
+            line_hash=ts_us,
         )
         base.update(over)
         rows.append({"ts": pd.Timestamp(ts_us, unit="us"), **base})

@@ -13,6 +13,7 @@ from datetime import datetime, timedelta
 import pytest
 from conftest import jobs_of
 
+from prometheus_clickhouselog_exporter_spark.operators.correlate import correlate_batch
 from prometheus_clickhouselog_exporter_spark.operators.metrics import metric_snapshot
 from prometheus_clickhouselog_exporter_spark.operators.parsing import parse_log_lines
 from prometheus_clickhouselog_exporter_spark.sources.fixtures import (
@@ -89,6 +90,26 @@ def test_batch_and_streaming_expositions_are_identical(spark, tmp_path, fixture_
     batch.load_metric_frames(metric_snapshot(raw, parse_log_lines(raw)))
     stream = _run(spark, tmp_path, {"00.log": standard_corpus().lines})
     assert batch.render_exposition() == stream.render_exposition()
+
+
+def test_batch_and_streaming_agree_on_tied_initial_lines(spark, tmp_path):
+    """Two initial lines of one query id at the same timestamp: both paths
+    break the tie by the same (ts, line_hash) key, so they pick the same
+    winner — same statement type counted, same sessions completed."""
+    lines = [
+        initial_line(T, 100, "q-tie", "10.0.0.1", 35000, "SELECT 0"),
+        initial_line(T, 101, "q-tie", "10.0.0.2", 35001, "INSERT INTO t VALUES (0)"),
+        memory_line(T + timedelta(seconds=2), 100, "q-tie", "1.00 MiB"),
+    ]
+    path = str(tmp_path / "tie.log")
+    FixtureLog(lines).write(path)
+    raw = read_log_batch(spark, path)
+    parsed = parse_log_lines(raw)
+    batch = PrometheusSnapshotSink()
+    batch.load_metric_frames(metric_snapshot(raw, parsed))
+    stream = _run(spark, tmp_path, {"00.log": lines})
+    assert batch.render_exposition() == stream.render_exposition()
+    assert stream.sessions == correlate_batch(parsed).filter("full_info").count()
 
 
 def test_fresh_sink_exposes_zeroed_unlabelled_histograms():
