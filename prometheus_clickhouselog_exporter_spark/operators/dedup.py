@@ -5,6 +5,12 @@ go through LSH-band blocking so only bucket-colliding candidate pairs are
 verified; n-gram Jaccard goes through an inverted-index (posting-list) join. Everything is pure DataFrame
 expressions — deterministic (fixed hash-family coefficients, no RNG), so
 results are reproducible run-to-run and testable.
+
+Connected components (pairs → clusters, the retention step) is written
+here once: ``min_label_rounds`` is the min-label kernel the fixed-round
+workloads call, ``large_star``/``small_star`` the star step, and
+``connected_components``/``connected_components_star`` iterate them to
+the ``_checksum`` fixpoint probe.
 """
 
 from __future__ import annotations
@@ -314,30 +320,73 @@ def ngram_jaccard_pairs(
     )
 
 
+def _checksum(df: DataFrame) -> tuple:
+    """Order-free fingerprint of a frame, for any column types: (row
+    count, bit_xor of every row's xxhash64). One action. Two equal
+    fingerprints on consecutive rounds is the fixpoint probe of both
+    connected-components loops."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*df.columns)).alias("h"),  # order-free, no ANSI overflow
+    ).collect()[0]
+    return (row["n"], row["h"])
+
+
+def min_label_rounds(edges: DataFrame, labels: DataFrame, rounds: int) -> DataFrame:
+    """Exactly ``rounds`` synchronous min-label rounds over the min
+    semiring: label(v) <- min(label(v), min over neighbors label(u)).
+
+    ``edges`` is ``(src, dst)`` with both directions present; ``labels``
+    is the ``(id, label)`` seed (any orderable id type). A node with no
+    edge keeps its label. Returns ``(id, label)``. Runs no action: the
+    fixed-round workloads replay this truncation in their oracle SQL, and
+    ``connected_components`` probes convergence around it.
+
+    Scale: each round is one shuffle join (edges ⋈ labels on src) plus a
+    min aggregate on dst with map-side combining; the per-round lazy
+    ``localCheckpoint`` cuts the lineage so round k's plan does not
+    re-derive rounds 1..k-1 (the classic Spark CC failure mode)."""
+    for _ in range(rounds):
+        best = (
+            edges.join(
+                labels.select(F.col("id").alias("src"), F.col("label").alias("sl")),
+                "src",
+            )
+            .groupBy("dst")
+            .agg(F.min("sl").alias("nl"))
+        )
+        labels = (
+            labels.join(best, labels["id"] == best["dst"], "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
+                ).alias("label"),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return labels
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Near-dup pairs → dedup clusters: (id, component) where component is
-    the minimum id reachable through the pair graph.
+    """Near-dup pairs → dedup clusters: (id, comp) where comp is the
+    minimum id reachable through the pair graph.
 
     This is the step that turns pairwise dedup output into something a
     pipeline can act on — pairs alone can't answer "which copy do we keep?"
     when dups chain (A≈B, B≈C but A!≈C): the cluster is the unit of
     retention, and min-id-per-component is the canonical pick.
 
-    Algorithm: hash-to-min label propagation. Each node starts labeled with
-    itself; per round every node takes the min label among itself and its
-    neighbors; converges in O(graph diameter) rounds. Dedup graphs are
-    near-cliques of bounded size, so the diameter is tiny (2-3 rounds);
-    for adversarial long-chain graphs the alternating large-star/small-star
-    variant (Kiveris et al., "Connected Components in MapReduce") drops to
-    O(log²n) rounds — same join/agg skeleton, swap when needed.
+    Algorithm: hash-to-min label propagation, one ``min_label_rounds``
+    round per iteration until a round leaves the ``_checksum`` probe
+    unchanged (one action per round); converges in O(graph diameter)
+    rounds. Dedup graphs are near-cliques of bounded size, so the diameter
+    is tiny (2-3 rounds); for adversarial long-chain graphs
+    ``connected_components_star`` drops to O(log²n) rounds. Raises
+    ``RuntimeError`` when ``max_iter`` rounds pass without a fixpoint.
 
-    Scale notes: each round is one shuffle join (edges ⋈ labels on node id)
-    plus one min-aggregate; ``localCheckpoint`` after every round truncates
-    the lineage so round k's plan doesn't re-derive rounds 1..k-1 (iterative
-    lineage growth is the classic Spark CC failure mode), and the
-    convergence probe reuses the checkpointed blocks. Edges shuffle once per
-    round; at 100 TB the label table is |V| ≈ docs-in-any-pair, far smaller
-    than the corpus.
+    Scale: edges shuffle once per round; at 100 TB the label table is
+    |V| ≈ docs-in-any-pair, far smaller than the corpus.
     """
     sym = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -345,39 +394,72 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    labels = sym.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
+    labels = sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
+    prev = None
     for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select("id", F.least("comp", "ncomp").alias("comp"), (F.col("ncomp") < F.col("comp")).alias("_chg"))
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
+        labels = min_label_rounds(sym, labels, 1)
+        cur = _checksum(labels)
+        if cur == prev:
             break
-    return labels
+        prev = cur
+    else:
+        raise RuntimeError(f"connected_components: no fixpoint after max_iter={max_iter} rounds")
+    return labels.withColumnRenamed("label", "comp")
+
+
+def _sym(e: DataFrame) -> DataFrame:
+    return e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def large_star(e: DataFrame) -> DataFrame:
+    """Large-star (Kiveris et al. 2014): every node points its LARGER
+    neighbors at m(u) = min(Γ(u) ∪ {u}). ``e`` is an undirected ``(u, v)``
+    edge list, either orientation; returns distinct ``(u, v)`` with
+    u > v."""
+    sym = _sym(e)
+    mins = sym.groupBy("u").agg(F.min("v").alias("m0")).select(
+        "u", F.least("m0", "u").alias("m")
+    )
+    return (
+        sym.join(mins, "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def small_star(e: DataFrame) -> DataFrame:
+    """Small-star (Kiveris et al. 2014): every node and its SMALLER
+    neighbors collapse onto the minimum of those neighbors. ``e`` is an
+    undirected ``(u, v)`` edge list, either orientation; returns distinct
+    ``(u, v)`` with u > v."""
+    # orient each edge from the larger endpoint
+    le = e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+    mins = le.groupBy("u").agg(F.min("v").alias("m"))
+    return (
+        le.join(mins, "u")
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .unionAll(mins.select("u", F.col("m").alias("v")))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
 
 
 def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Connected components by alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the adversarial-graph twin of ``connected_components``: converges in
-    O(log² n) rounds regardless of graph diameter, where hash-to-min
-    needs O(diameter) rounds (a 10⁶-long chain = 10⁶ rounds vs ~40).
+    """Connected components by alternating ``large_star``/``small_star``
+    rounds (Kiveris et al., "Connected Components in MapReduce and
+    Beyond") — the adversarial-graph twin of ``connected_components``:
+    converges in O(log² n) rounds regardless of graph diameter, where
+    hash-to-min needs O(diameter) rounds (a 10⁶-long chain = 10⁶ rounds
+    vs ~40).
 
-    large-star: every node points its LARGER neighbors at the minimum of
-    its neighborhood (incl. itself); small-star: every node and its
-    smaller neighbors collapse onto that minimum. Each round is a
-    groupBy-min + join on the current edge list — same shuffle skeleton
-    as one hash-to-min round; lineage truncated per round. Converged when
-    the edge list is a fixed point (star graph: every node → its
-    component min); output matches ``connected_components`` exactly.
+    Each round is two groupBy-min + join passes over the current edge
+    list, lineage truncated per round. Converged when a round leaves the
+    edge list's ``_checksum`` unchanged (star forest: every non-root
+    points at its component min); output matches ``connected_components``
+    exactly. Raises ``RuntimeError`` when ``max_iter`` rounds pass without
+    a fixpoint.
     """
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -385,52 +467,17 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame
         .distinct()
         .localCheckpoint()
     )
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        sym = _sym(e)
-        mins = sym.groupBy("u").agg(F.min("v").alias("m0")).select(
-            "u", F.least("m0", "u").alias("m")
-        )
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # orient each edge from the larger endpoint
-        le = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = le.groupBy("u").agg(F.min("v").alias("m"))
-        moved = (
-            le.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionAll(mins.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return moved
-
-    def _checksum(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),  # order-free, no ANSI overflow
-        ).collect()[0]
-        return (row["n"], row["h"])
-
     prev = None
     for _ in range(max_iter):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
+        edges = small_star(large_star(edges)).localCheckpoint(eager=False)
         cur = _checksum(edges)
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after max_iter={max_iter} rounds"
+        )
 
     # fixed point is a star: every non-root points at its component min
     nodes = _sym(edges).select("u").distinct()

@@ -18,8 +18,10 @@ a /metrics handler or push it to a ClickHouse/Parquet metrics table).
 
 from __future__ import annotations
 
+import math
 import threading
 from collections import defaultdict
+from decimal import Decimal
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,6 +41,22 @@ _HISTOGRAMS = {
     "clickhouse_select_query_rows_per_second": ("rps", ROWS_PER_SEC_BUCKETS, "obs_stats", False),
     "clickhouse_select_query_bytes_per_second": ("speed", BYTES_PER_SEC_BUCKETS, "obs_stats", False),
 }
+
+
+def _go_float(v: float) -> str:
+    """A sample value as client_golang writes it (Go
+    ``strconv.FormatFloat(v, 'g', -1, 64)``): the shortest digits that
+    read back as the same double, in exponent form when the decimal
+    exponent is below -4 or at least 6. ``:g`` keeps only 6 significant
+    digits, so a large ``_sum`` would hide every smaller increment."""
+    if not math.isfinite(v):
+        return "NaN" if math.isnan(v) else ("+Inf" if v > 0 else "-Inf")
+    t = Decimal(repr(float(v))).normalize().as_tuple()
+    nd = len(t.digits)
+    exp = nd - 1 + t.exponent
+    if exp < -4 or exp >= 6:
+        return f"{v:.{nd - 1}e}"
+    return f"{v:.{max(nd - 1 - exp, 0)}f}"
 
 
 class _Hist:
@@ -176,6 +194,6 @@ class PrometheusSnapshotSink:
                     for b in h.buckets:
                         out.append(f'{name}_bucket{{{lbl}le="{b:g}"}} {int(h.counts[b])}')
                     out.append(f'{name}_bucket{{{lbl}le="+Inf"}} {int(h.total)}')
-                    out.append(f"{name}_sum{{{lbl[:-1]}}}" .replace("{}", "") + f" {h.sum:g}")
+                    out.append(f"{name}_sum{{{lbl[:-1]}}}" .replace("{}", "") + f" {_go_float(h.sum)}")
                     out.append(f"{name}_count{{{lbl[:-1]}}}".replace("{}", "") + f" {int(h.total)}")
         return "\n".join(out) + "\n"

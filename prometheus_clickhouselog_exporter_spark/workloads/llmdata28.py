@@ -460,12 +460,13 @@ def dedup_minhash_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: edges come from the banded-LSH candidate join (never
     all-pairs); each CC round shuffles O(edges) slim (dst, label)
     pairs with map-side min combining and a lineage cut per round —
-    the graph_connected_components discipline; the production
+    ``operators.dedup.min_label_rounds``, as in
+    graph_connected_components; the production
     large-star/small-star alternation (O(log n) rounds on adversarial
     diameters) keeps the same per-round shuffle shape.
 
     Ref cite: none — /root/reference has no dedup surface."""
-    from ..operators.dedup import minhash_lsh_dedup
+    from ..operators.dedup import min_label_rounds, minhash_lsh_dedup
 
     d = fan_out(table(spark, sf_dir, "documents")).filter(
         F.size(F.split(F.col("text"), " ")) >= 3
@@ -480,28 +481,10 @@ def dedup_minhash_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # reused every round
     )
-    lab = e.select(F.col("src").alias("id")).distinct().withColumn(
+    seed = e.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
-    for _ in range(_CC_ROUNDS):
-        best = (
-            e.join(
-                lab.select(F.col("id").alias("src"), F.col("label").alias("sl")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("sl").alias("nl"))
-        )
-        lab = (
-            lab.join(best, lab["id"] == best["dst"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    lab = min_label_rounds(e, seed, _CC_ROUNDS)
     return (
         lab.groupBy(F.col("label").cast("bigint").alias("cluster_id"))
         .agg(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import min_label_rounds
 from .core import query, table
 
 _N_IMGS = 64
@@ -265,30 +266,10 @@ def image_phash_hamming_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # reused every round + certificate
     )
-    lab = (
-        e.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
+    seed = e.select(F.col("src").alias("id")).distinct().withColumn(
+        "label", F.col("id")
     )
-    for _ in range(_CC_ROUNDS):
-        nmin = (
-            e.join(
-                lab.select(F.col("id").alias("src"), F.col("label").alias("sl")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("sl").alias("nl"))
-        )
-        lab = (
-            lab.join(nmin, lab["id"] == nmin["dst"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    lab = min_label_rounds(e, seed, _CC_ROUNDS)
     viol = (
         e.join(lab.select(F.col("id").alias("src"), F.col("label").alias("ls")), "src")
         .join(lab.select(F.col("id").alias("dst"), F.col("label").alias("lt")), "dst")

@@ -531,7 +531,7 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: identical scale shape to dedup_minhash_clusters_cc plus
     one doc-keyed join for the quality score and an integer argmax."""
-    from ..operators.dedup import minhash_lsh_dedup
+    from ..operators.dedup import min_label_rounds, minhash_lsh_dedup
     from .llmdata28 import _CC_ROUNDS
 
     d = fan_out(table(spark, sf_dir, "documents")).filter(
@@ -547,30 +547,10 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    lab = (
-        e.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
+    seed = e.select(F.col("src").alias("id")).distinct().withColumn(
+        "label", F.col("id")
     )
-    for _ in range(_CC_ROUNDS):
-        nmin = (
-            e.join(
-                lab.select(F.col("id").alias("src"), F.col("label").alias("sl")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("sl").alias("nl"))
-        )
-        lab = (
-            lab.join(nmin, lab["id"] == nmin["dst"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    lab = min_label_rounds(e, seed, _CC_ROUNDS)
     ntok = table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"),
         F.size(F.split("text", " ")).cast("bigint").alias("n_tok"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dedup import min_label_rounds
 from .core import fround, query, table
 from .relational26 import _LP_SQL_GRAPH, _name_graph
 
@@ -66,38 +67,21 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     communities) and BFS (hop counts) answer different questions on
     the same shared graph.
 
-    100 TB: each round shuffles O(edges) slim (dst, label) pairs with
-    map-side min combining; fixed rounds keep the DAG static and
-    localCheckpoint cuts lineage (the PageRank discipline). The
-    production form alternates large-star/small-star (Kiveris et al.)
+    100 TB: each round (``operators.dedup.min_label_rounds``) shuffles
+    O(edges) slim (dst, label) pairs with map-side min combining; fixed
+    rounds keep the DAG static and localCheckpoint cuts lineage (the
+    PageRank discipline). The production form alternates
+    large-star/small-star (Kiveris et al.; graph_cc_large_small_star)
     to converge in O(log n) rounds on adversarial diameters — same
     per-round shuffle shape, noted not needed at block diameters."""
     nm, e = _name_graph(spark, sf_dir)
-    lab = nm.select("p_name", F.col("p_name").alias("label"))
-    for _ in range(_CC_ROUNDS):
-        best = (
-            e.join(
-                lab.select(F.col("p_name").alias("src"), F.col("label").alias("sl")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("sl").alias("nl"))
-        )
-        lab = (
-            lab.join(best, lab["p_name"] == best["dst"], "left")
-            .select(
-                "p_name",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    seed = nm.select(F.col("p_name").alias("id"), F.col("p_name").alias("label"))
+    lab = min_label_rounds(e, seed, _CC_ROUNDS)
     return (
         lab.groupBy(F.col("label").alias("component"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
-            F.min("p_name").alias("first_member"),
+            F.min("id").alias("first_member"),
         )
         .orderBy("component")
     )

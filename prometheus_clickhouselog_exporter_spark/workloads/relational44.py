@@ -576,57 +576,31 @@ def graph_cc_large_small_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     the propagation labels exactly (and tests/test_relational44.py
     re-asserts the two algorithms' censuses agree in-engine).
 
-    100 TB: each round is two groupBy-min + join passes over the edge
+    The star step is ``operators.dedup.large_star``/``small_star``
+    (the same step ``connected_components_star`` iterates to its
+    probe); here it runs a fixed _LSS_PAIRS pairs over one row per
+    undirected edge, and each node's label is its smaller partner in
+    the final star forest (a center keeps its own name).
+
+    100 TB: each pair is two groupBy-min + join passes over the edge
     list with distinct dedup — O(edges) shuffles, lineage cut per
-    round; no node ever aggregates more than its degree.
+    pair; no node ever aggregates more than its degree.
 
     Ref cite: none — /root/reference has no graph surface."""
+    from ..operators.dedup import large_star, small_star
     from .relational26 import _name_graph
 
     nm, e0 = _name_graph(spark, sf_dir)
-    # undirected edge set, kept symmetric + deduped between operations
-    E = e0.select("src", "dst").distinct().localCheckpoint(eager=False)
-
-    def _star(E, keep_larger: bool):
-        m = (
-            E.groupBy("src")
-            .agg(F.min("dst").alias("mn"))
-            .select("src", F.least(F.col("mn"), F.col("src")).alias("m"))
-        )
-        side = (
-            (F.col("dst") > F.col("src"))
-            if keep_larger
-            else (F.col("dst") <= F.col("src"))
-        )
-        hooked = (
-            E.join(m, "src")
-            .where(side)
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-        )
-        # small-star also hooks u itself onto m
-        if not keep_larger:
-            hooked = hooked.unionByName(
-                m.select(F.col("src").alias("a"), F.col("m").alias("b"))
-            )
-        und = hooked.where(F.col("a") != F.col("b"))
-        return (
-            und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionByName(
-                und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-
+    # e0 is symmetric: keep one (u, v) row per undirected edge
+    E = e0.filter(F.col("src") > F.col("dst")).select(
+        F.col("src").alias("u"), F.col("dst").alias("v")
+    )
     for _ in range(_LSS_PAIRS):
-        E = _star(E, keep_larger=True)  # large-star
-        E = _star(E, keep_larger=False)  # small-star
-    partner = E.groupBy("src").agg(F.min("dst").alias("mn"))
-    lab = nm.join(partner, nm["p_name"] == partner["src"], "left").select(
-        "p_name",
-        F.least(F.col("p_name"), F.coalesce(F.col("mn"), F.col("p_name"))).alias(
-            "label"
-        ),
+        E = small_star(large_star(E)).localCheckpoint(eager=False)
+    # star forest: every non-center u points at its component minimum
+    partner = E.groupBy("u").agg(F.min("v").alias("mn"))
+    lab = nm.join(partner, nm["p_name"] == partner["u"], "left").select(
+        "p_name", F.coalesce(F.col("mn"), F.col("p_name")).alias("label")
     )
     return (
         lab.groupBy(F.col("label").alias("component"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dedup import min_label_rounds
 from .core import fround, query, table
 from .relational26 import _LP_SQL_GRAPH, _name_graph
 from .relational42 import _cc_round_sql
@@ -214,28 +215,10 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy over edges joined to labels on the same node-keyed exchange
     the CC rounds already use; the Q fold is community-count-sized."""
     nm, e = _name_graph(spark, sf_dir)
-    lab = nm.select("p_name", F.col("p_name").alias("label"))
-    for _ in range(4):
-        best = (
-            e.join(
-                lab.select(F.col("p_name").alias("src"), F.col("label").alias("sl")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min("sl").alias("nl"))
-        )
-        lab = (
-            lab.join(best, lab["p_name"] == best["dst"], "left")
-            .select(
-                "p_name",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    la = lab.select(F.col("p_name").alias("src"), F.col("label").alias("cl_a"))
-    lb = lab.select(F.col("p_name").alias("dst"), F.col("label").alias("cl_b"))
+    seed = nm.select(F.col("p_name").alias("id"), F.col("p_name").alias("label"))
+    lab = min_label_rounds(e, seed, 4)
+    la = lab.select(F.col("id").alias("src"), F.col("label").alias("cl_a"))
+    lb = lab.select(F.col("id").alias("dst"), F.col("label").alias("cl_b"))
     e2 = e.join(la, "src").join(lb, "dst")
     per_c = e2.groupBy(F.col("cl_a").alias("c")).agg(
         F.count_if(F.col("cl_a") == F.col("cl_b")).cast("bigint").alias("e_in"),

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from prometheus_clickhouselog_exporter_spark.operators.dedup import (
     connected_components,
     connected_components_star,
+    min_label_rounds,
 )
 from prometheus_clickhouselog_exporter_spark.operators.sampling import (
     deterministic_sample,
@@ -76,6 +77,44 @@ def test_cc_star_round_count_logarithmic(spark):
     # diameter — exercised implicitly (max_iter=30 default < 63 hops).
     labels = connected_components_star(_pairs(spark, [(i, i + 1) for i in range(1, 65)]))
     assert labels.filter(F.col("comp") == 1).count() == 65  # nodes 1..65
+
+
+def test_cc_caps_fail_loud(spark):
+    # 7-chain: hash-to-min needs 7 rounds (6 hops + 1 unchanged), the
+    # star loop at least 2 (one to move, one to see nothing move). A cap
+    # below that is an error, never a partial labelling.
+    chain = _pairs(spark, [(i, i + 1) for i in range(1, 7)])
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(chain, max_iter=2)
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components_star(chain, max_iter=1)
+
+
+def _sym_edges(spark, edges, id_type):
+    both = edges + [(b, a) for a, b in edges]
+    return spark.createDataFrame(both, f"src {id_type}, dst {id_type}")
+
+
+def test_min_label_rounds_truncates_at_rounds(spark):
+    # 1-2-3-4 at rounds=2: the min walks exactly two hops, so node 4
+    # still carries node 2's label — the truncation the fixed-round
+    # oracles replay.
+    e = _sym_edges(spark, [(1, 2), (2, 3), (3, 4)], "bigint")
+    seed = spark.createDataFrame([(i, i) for i in range(1, 5)], "id bigint, label bigint")
+    out = min_label_rounds(e, seed, 2)
+    assert out.columns == ["id", "label"]
+    assert {r["id"]: r["label"] for r in out.collect()} == {1: 1, 2: 1, 3: 1, 4: 2}
+
+
+def test_min_label_rounds_string_ids_and_isolated_seed(spark):
+    # string ids order lexicographically; "z" has no edge and keeps its
+    # own label
+    e = _sym_edges(spark, [("b", "c"), ("a", "b")], "string")
+    seed = spark.createDataFrame(
+        [(n, n) for n in ("a", "b", "c", "z")], "id string, label string"
+    )
+    got = {r["id"]: r["label"] for r in min_label_rounds(e, seed, 3).collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "z": "z"}
 
 
 def test_sample_partition_independent(spark, docs_sf001):

@@ -123,6 +123,20 @@ def test_fresh_sink_exposes_zeroed_unlabelled_histograms():
     assert "clickhouse_query_time_bucket" not in text
 
 
+def test_exposition_sums_keep_full_precision():
+    """_sum values print as client_golang prints them (Go
+    FormatFloat(v, 'g', -1, 64)): every digit of a large sum survives, so
+    a small increment still moves rate(_sum)."""
+    sink = PrometheusSnapshotSink()
+    names = ("rows_read", "bytes_read", "rows_per_second", "bytes_per_second")
+    for name, v in zip(names, (12345678901.0, 0.0, 86.5, 1e6)):
+        sink.histograms[f"clickhouse_select_query_{name}"][""].sum = v
+    text = sink.render_exposition()
+    for name, want in zip(names, ("1.2345678901e+10", "0", "86.5", "1e+06")):
+        assert f"clickhouse_select_query_{name}_sum {want}\n" in text
+    assert 'clickhouse_select_query_rows_read_bucket{le="1e+06"} 0\n' in text
+
+
 def test_cross_batch_correlation(spark, tmp_path):
     """initial in batch 1, stats+memory in batch 2 → still one session."""
     f1 = [initial_line(T, 1, "q-cross", "10.1.0.1", 9000, "SELECT 1")]

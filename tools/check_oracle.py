@@ -117,6 +117,13 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry_mod
+
+    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        return 1
+
     from prometheus_clickhouselog_exporter_spark.session import get_spark
 
     spark = get_spark("oracle-check", cores=8, shuffle_partitions=8)
@@ -124,7 +131,6 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
