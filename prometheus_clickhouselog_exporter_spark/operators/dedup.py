@@ -8,7 +8,8 @@ results are reproducible run-to-run and testable.
 
 Connected components (pairs → clusters, the retention step) is written
 here once: ``min_label_rounds`` is the min-label kernel the fixed-round
-workloads call, ``large_star``/``small_star`` the star step, and
+workloads call (with ``weight=``, also the BFS and Bellman–Ford
+relaxation), ``large_star``/``small_star`` the star step, and
 ``connected_components``/``connected_components_star`` iterate them to
 the ``_checksum`` fixpoint probe.
 """
@@ -332,20 +333,30 @@ def _checksum(df: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def min_label_rounds(edges: DataFrame, labels: DataFrame, rounds: int) -> DataFrame:
+def min_label_rounds(
+    edges: DataFrame, labels: DataFrame, rounds: int, weight: Column | None = None
+) -> DataFrame:
     """Exactly ``rounds`` synchronous min-label rounds over the min
     semiring: label(v) <- min(label(v), min over neighbors label(u)).
 
     ``edges`` is ``(src, dst)`` with both directions present; ``labels``
     is the ``(id, label)`` seed (any orderable id type). A node with no
-    edge keeps its label. Returns ``(id, label)``. Runs no action: the
-    fixed-round workloads replay this truncation in their oracle SQL, and
-    ``connected_components`` probes convergence around it.
+    edge keeps its label. Returns ``(id, label)``. Calls no action (under
+    AQE each lazy checkpoint still runs its round's shuffle stages when it
+    is planned): the fixed-round workloads replay this truncation in their
+    oracle SQL, and ``connected_components`` probes convergence around it.
+
+    With ``weight`` (a numeric column over ``edges``) a round relaxes
+    min(label(u) + weight) instead: the min-plus semiring of BFS
+    (``F.lit(1)``) and Bellman–Ford (an edge-weight column). It is never
+    inferred from the edge columns: component callers pass weighted edges
+    too.
 
     Scale: each round is one shuffle join (edges ⋈ labels on src) plus a
     min aggregate on dst with map-side combining; the per-round lazy
     ``localCheckpoint`` cuts the lineage so round k's plan does not
     re-derive rounds 1..k-1 (the classic Spark CC failure mode)."""
+    relaxed = F.col("sl") if weight is None else F.col("sl") + weight
     for _ in range(rounds):
         best = (
             edges.join(
@@ -353,7 +364,7 @@ def min_label_rounds(edges: DataFrame, labels: DataFrame, rounds: int) -> DataFr
                 "src",
             )
             .groupBy("dst")
-            .agg(F.min("sl").alias("nl"))
+            .agg(F.min(relaxed).alias("nl"))
         )
         labels = (
             labels.join(best, labels["id"] == best["dst"], "left")

@@ -214,6 +214,89 @@ def copurchase_edges(li: DataFrame, directed: bool = True) -> DataFrame:
     return pairs.where(cond).select("src", "dst").distinct()
 
 
+def name_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The part-name similarity graph the graph family shares: ``nm`` is
+    the distinct ``(p_name, blk)`` node table (``blk`` = the name's second
+    word), ``e`` the ``(src, dst, w)`` edges between two distinct names of
+    one block with ``w = levenshtein(src, dst) <= 2``, in both
+    orientations. Callers that want each undirected edge once filter
+    ``src < dst``.
+
+    Distinct-first, so the block self-join is vocabulary-sized; both
+    frames are lazily checkpointed so the join runs once however many
+    rounds or roles read the edges."""
+    from pyspark.sql import functions as F
+
+    p = table(spark, sf_dir, "part").select(
+        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
+    )
+    nm = p.distinct().localCheckpoint(eager=False)
+    a = nm.select(F.col("p_name").alias("src"), "blk")
+    b = nm.select(F.col("p_name").alias("dst"), "blk")
+    e = (
+        a.join(b, "blk")
+        .withColumn("w", F.levenshtein(F.col("src"), F.col("dst")))
+        .filter((F.col("src") != F.col("dst")) & (F.col("w") <= 2))
+        .select("src", "dst", "w")
+        .localCheckpoint(eager=False)
+    )
+    return nm, e
+
+
+def triangles(oriented: DataFrame) -> DataFrame:
+    """Every triangle of an oriented edge list ``(src, dst)`` (each
+    undirected edge once, ``src < dst``) as one ``(a, b, c)`` row with
+    a < b < c: the two-path (a,b)+(b,c) closed by the edge (a,c), so no
+    triangle is built twice and no distinct is needed.
+
+    Scale: the canonical distributed triangle scheme, two equi-joins.
+    Orienting by degree instead of by id bounds the two-path fan-out by
+    the graph's arboricity when blocks stop being small."""
+    from pyspark.sql import functions as F
+
+    e1 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    e2 = oriented.select(F.col("src").alias("b"), F.col("dst").alias("c"))
+    e3 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("c"))
+    return e1.join(e2, "b").join(e3, ["a", "c"]).select("a", "b", "c")
+
+
+def kcore_rounds(edges: DataFrame, nodes: DataFrame, k: int, rounds: int) -> list[DataFrame]:
+    """Exactly ``rounds`` synchronous k-core peeling rounds: each keeps the
+    nodes with at least ``k`` neighbours among the previous round's
+    survivors. ``edges`` is ``(src, dst)`` with each undirected edge once;
+    ``nodes`` is the ``(id)`` seed. Returns the survivor frame of every
+    round, ``[nodes, round 1, ..., round rounds]``, each ``(id)``; a node
+    left without a surviving edge is gone after that round. Calls no
+    action (under AQE each lazy checkpoint still runs its round's shuffle
+    stage when it is planned): the fixed-round workloads replay this
+    truncation in their oracle SQL.
+
+    Scale: the survivor set is |V|-bounded (one id per live node), so both
+    endpoint semi-joins broadcast it and the edge list is filtered at scan
+    instead of shuffled twice a round; both endpoints explode in one pass
+    into a single degree aggregate. Survivors only shrink, so later rounds
+    are cheaper; the per-round lazy ``localCheckpoint`` cuts the lineage.
+    Beyond a broadcastable V this becomes a bloom-filtered keyed
+    semi-join of the same shape."""
+    from pyspark.sql import functions as F
+
+    frames = [nodes]
+    for _ in range(rounds):
+        live = edges.join(
+            F.broadcast(nodes.select(F.col("id").alias("src"))), "src"
+        ).join(F.broadcast(nodes.select(F.col("id").alias("dst"))), "dst")
+        nodes = (
+            live.select(F.explode(F.array("src", "dst")).alias("id"))
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("d"))
+            .filter(F.col("d") >= k)
+            .select("id")
+            .localCheckpoint(eager=False)
+        )
+        frames.append(nodes)
+    return frames
+
+
 # Shared oracle for the five ANN error-bound certificates (LSH / IVF /
 # PQ-ADC / IVF-PQ / graph-expand — operators/similarity.certify_topk_bound):
 # the contract is identical for every rung, only eps differs (and eps is

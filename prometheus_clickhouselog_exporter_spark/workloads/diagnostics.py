@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
+from .core import fround, name_graph, query, table
 
 
 @query(
@@ -300,8 +300,8 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_pagerank_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (3 fixed iterations, d = 0.85, simple variant without
     dangling-mass redistribution) over the name-similarity graph — nodes
-    are DISTINCT part names, edges are Levenshtein ≤ 2 within a block.
-    The iterative-algorithm pattern next to connected components
+    are DISTINCT part names, edges are Levenshtein ≤ 2 within a block
+    (``core.name_graph``). The iterative-algorithm pattern next to connected components
     (operators/dedup.py): rank loop in the driver, each step one
     contribution join + aggregation.
 
@@ -309,28 +309,11 @@ def graph_pagerank_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is vocabulary-sized; on a billion-node graph each iteration is
     one shuffle of contributions keyed by dst, the rank vector gets
     `localCheckpoint` every few steps to cut lineage (the CC pattern,
-    dedup.py:330-467), and fixed iteration count keeps the job graph
-    static. Deterministic: fixed iterations, no RNG; ±1-ulp sum-order
+    ``dedup.min_label_rounds``), and fixed iteration count keeps the job
+    graph static. Deterministic: fixed iterations, no RNG; ±1-ulp sum-order
     slack is absorbed by fround after scaling to per-million units.
     """
-    p = table(spark, sf_dir, "part").select(
-        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
-    )
-    # nm feeds endpoints, rank init, every iteration's outer join and the
-    # final projection; e feeds degrees + contributions — checkpoint both
-    # so the levenshtein block join runs once (plan audit: part rescans).
-    nm = p.select("p_name", "blk").distinct().localCheckpoint(eager=False)
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e = (
-        a.join(b, "blk")
-        .filter(
-            (F.col("src") != F.col("dst"))
-            & (F.levenshtein(F.col("src"), F.col("dst")) <= 2)
-        )
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
+    nm, e = name_graph(spark, sf_dir)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("d"))
     n_nodes = nm.count()  # vocabulary-sized by construction (distinct-first)
     ranks = nm.select("p_name", F.lit(1.0 / n_nodes).alias("p"))
@@ -338,9 +321,9 @@ def graph_pagerank_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(3):
         contribs = (
             contrib_base.join(ranks, ranks["p_name"] == contrib_base["src"])
-            .select("dst", (F.col("p") / F.col("d")).alias("w"))
+            .select("dst", (F.col("p") / F.col("d")).alias("share"))
             .groupBy("dst")
-            .agg(F.sum("w").alias("mass"))
+            .agg(F.sum("share").alias("mass"))
         )
         ranks = nm.join(contribs, nm["p_name"] == contribs["dst"], "left").select(
             "p_name",

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import copurchase_edges, fround, query, table
+from .core import copurchase_edges, fround, kcore_rounds, query, table
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 4
@@ -84,51 +84,25 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract every iterative row here uses; the oracle replays all
     four rounds.
 
-    Scale: each round is one degree aggregate + one semi-join against
-    the shrinking survivor set — the frontier SHRINKS monotonically,
-    so later rounds are cheaper; localCheckpoint per round cuts the
-    lineage exactly like dedup_cluster_canonical's CC loop. Rounds
+    Scale (``core.kcore_rounds``): each round is one degree aggregate +
+    broadcast semi-joins against the shrinking survivor set — the
+    frontier SHRINKS monotonically, so later rounds are cheaper;
+    localCheckpoint per round cuts the lineage exactly like
+    dedup_cluster_canonical's CC loop. Rounds
     needed in practice ≈ the peel depth, rarely more than a handful.
     """
     li = table(spark, sf_dir, "lineitem")
     # one-exchange edge build (r13 optimization pass — core.copurchase_edges;
     # collect_set subsumes the old lines-level distinct)
-    edges = (
-        copurchase_edges(li.select("l_orderkey", "l_partkey"), directed=False)
-        .select(F.col("src").alias("pa"), F.col("dst").alias("pb"))
-        .localCheckpoint(eager=False)  # edge list reused every round
-    )
+    edges = copurchase_edges(
+        li.select("l_orderkey", "l_partkey"), directed=False
+    ).localCheckpoint(eager=False)  # edge list reused every round
     nodes = (
-        edges.select(F.col("pa").alias("p"))
-        .unionByName(edges.select(F.col("pb").alias("p")))
+        edges.select(F.explode(F.array("src", "dst")).alias("id"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    counts = [nodes.count()]
-    for _ in range(_KCORE_ROUNDS):
-        # survivor set is |V|-bounded (one long per live node) →
-        # broadcast both semi-join sides so the edge list is filtered at
-        # scan instead of shuffled twice per round (r13 constant-factor
-        # pass; at cluster scale with a non-broadcastable V this becomes
-        # a bloom-filtered keyed semi-join, same plan shape)
-        na = F.broadcast(nodes.select(F.col("p").alias("pa")))
-        nb = F.broadcast(nodes.select(F.col("p").alias("pb")))
-        live = edges.join(na, "pa").join(nb, "pb")
-        # explode both endpoints in ONE pass: the r10-r12 unionByName of
-        # two selects re-evaluated the (uncheckpointed) live join TWICE
-        # per round — the same rows, twice the join work (r13
-        # optimization pass, guide §2.4 duplicated-subtree check)
-        deg = (
-            live.select(F.explode(F.array("pa", "pb")).alias("p"))
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        nodes = (
-            deg.filter(F.col("d") >= _KCORE_K)
-            .select("p")
-            .localCheckpoint(eager=False)
-        )
-        counts.append(nodes.count())
+    counts = [f.count() for f in kcore_rounds(edges, nodes, _KCORE_K, _KCORE_ROUNDS)]
     converged = counts[-1] == counts[-2]
     rows = [(r, int(c), converged) for r, c in enumerate(counts)]
     return spark.createDataFrame(

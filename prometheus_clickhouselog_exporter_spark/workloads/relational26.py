@@ -4,44 +4,27 @@
 (components: operators/dedup.py large-star; rank: diagnostics PageRank;
 unweighted distances: relational5 BFS; triangles: relational5).
 
-Both run on the same vocabulary-sized Levenshtein name-similarity graph
-the BFS member uses, with fixed relaxation rounds so the DuckDB oracle
-is expressible as unrolled MATERIALIZED CTEs (SCALE.md: DuckDB inlines
-CTEs — an unmaterialized round chain re-evaluates exponentially).
-Everything is integer arithmetic: bit-deterministic across engines,
-reduction orders, and partitionings.
+Both run on the vocabulary-sized Levenshtein name-similarity graph the
+whole family shares (``core.name_graph``); SSSP and BFS are the
+min-plus form of the component kernel (``min_label_rounds(weight=)``,
+via ``_block_source_distances``). Fixed relaxation rounds keep the
+DuckDB oracle expressible as unrolled MATERIALIZED CTEs (SCALE.md:
+DuckDB inlines CTEs — an unmaterialized round chain re-evaluates
+exponentially). Everything is integer arithmetic: bit-deterministic
+across engines, reduction orders, and partitionings.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import query, table
+from ..operators.dedup import min_label_rounds
+from .core import name_graph, query
 
 _LP_ROUNDS = 3
 _SSSP_ROUNDS = 4
 _INF = 999
-
-
-def _name_graph(spark: SparkSession, sf_dir: str):
-    """Distinct-first Levenshtein<=2 similarity graph over part names
-    (relational5.graph_bfs_name_distances' construction), checkpointed:
-    (nm nodes, e weighted edges)."""
-    p = table(spark, sf_dir, "part").select(
-        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
-    )
-    nm = p.distinct().localCheckpoint(eager=False)
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e = (
-        a.join(b, "blk")
-        .withColumn("w", F.levenshtein(F.col("src"), F.col("dst")))
-        .filter((F.col("src") != F.col("dst")) & (F.col("w") <= 2))
-        .select("src", "dst", "w")
-        .localCheckpoint(eager=False)
-    )
-    return nm, e
 
 
 _LP_SQL_GRAPH = """
@@ -99,7 +82,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineage cut — the PageRank discipline). 100 TB: rounds shuffle
     O(edges) slim (dst, label-hash) rows; the census is a final count.
     """
-    nm, e = _name_graph(spark, sf_dir)
+    nm, e = name_graph(spark, sf_dir)
     lab = nm.select("p_name", F.col("p_name").alias("label"))
     wpick = Window.partitionBy("dst").orderBy(F.desc("c"), "label")
     for _ in range(_LP_ROUNDS):
@@ -176,40 +159,32 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: each round shuffles O(edges) integer triples; fixed rounds
     keep the DAG static; localCheckpoint cuts lineage per round. A
     production loop adds the 1-row convergence-checksum stop."""
-    nm, e = _name_graph(spark, sf_dir)
+    return _block_source_distances(spark, sf_dir, _SSSP_ROUNDS, F.col("w"))
+
+
+def _block_source_distances(
+    spark: SparkSession, sf_dir: str, rounds: int, weight: Column
+) -> DataFrame:
+    """``(p_name, blk, dist)`` after ``rounds`` min-plus relaxations
+    (``operators.dedup.min_label_rounds``) of the shared name graph from
+    each block's lexicographically first name; ``dist`` is -1 where the
+    rounds did not reach. Unreached labels stay at the ``_INF`` seed, as
+    in the oracles' rounds: every seed is <= ``_INF``, so the kernel's
+    ``least(d, coalesce(nd, d))`` equals their ``least(d, coalesce(nd,
+    _INF))``."""
+    nm, e = name_graph(spark, sf_dir)
     s = nm.groupBy("blk").agg(F.min("p_name").alias("srcname"))
-    dist = nm.join(s, "blk").select(
-        "p_name",
-        "blk",
+    seed = nm.join(s, "blk").select(
+        F.col("p_name").alias("id"),
         F.when(F.col("p_name") == F.col("srcname"), 0)
         .otherwise(_INF)
-        .alias("dist"),
+        .alias("label"),
     )
-    for _ in range(_SSSP_ROUNDS):
-        relax = (
-            e.join(
-                dist.select(F.col("p_name").alias("src"), F.col("dist").alias("sd")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(F.min(F.col("sd") + F.col("w")).alias("nd"))
-        )
-        dist = (
-            dist.join(relax, dist["p_name"] == relax["dst"], "left")
-            .select(
-                "p_name",
-                "blk",
-                F.least(
-                    F.col("dist"), F.coalesce(F.col("nd"), F.lit(_INF))
-                ).alias("dist"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return dist.select(
-        "p_name",
-        "blk",
-        F.when(F.col("dist") >= _INF, -1)
-        .otherwise(F.col("dist"))
+    return min_label_rounds(e, seed, rounds, weight=weight).select(
+        F.col("id").alias("p_name"),
+        F.split("id", " ").getItem(1).alias("blk"),
+        F.when(F.col("label") >= _INF, -1)
+        .otherwise(F.col("label"))
         .cast("long")
         .alias("dist"),
     )

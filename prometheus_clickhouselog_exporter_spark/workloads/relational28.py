@@ -14,9 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
+from .core import fround, kcore_rounds, name_graph, query, table
 from .llmdata12 import _langid_case_sql
-from .relational26 import _name_graph
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 3
@@ -215,26 +214,26 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrink), so fixed-round truncation under-peels — never mislabels a
     true core member — and the oracle runs the same truncation.
 
-    Plan: per round one edge join against the active set + a HAVING
-    count — O(active edges) shuffle; localCheckpoint cuts round
-    lineage. 100 TB: identical shape; the peeling terminates in
-    O(degeneracy) rounds with a 1-row convergence checksum stop."""
-    nm, e = _name_graph(spark, sf_dir)
-    active = nm.select("p_name")
-    for _ in range(_KCORE_ROUNDS):
-        active = (
-            e.join(active.withColumnRenamed("p_name", "src"), "src")
-            .join(
-                active.select(F.col("p_name").alias("dst")), "dst"
-            )
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= _KCORE_K)
-            .select(F.col("src").alias("p_name"))
-            .localCheckpoint(eager=False)
-        )
+    Plan (``core.kcore_rounds``, graph_kcore_peel's round over the
+    oriented edges): per round broadcast semi-joins of the edge list
+    against the active set + one degree count; localCheckpoint cuts
+    round lineage. 100 TB: identical shape; full peeling terminates in
+    O(degeneracy) rounds, so a production run would loop until the
+    survivor count stops changing — this fixed-round form runs no such
+    stop."""
+    nm, e = name_graph(spark, sf_dir)
+    core = kcore_rounds(
+        e.filter(F.col("src") < F.col("dst")).select("src", "dst"),
+        nm.select(F.col("p_name").alias("id")),
+        _KCORE_K,
+        _KCORE_ROUNDS,
+    )[-1]
     return (
-        nm.join(active.withColumn("in_core", F.lit(True)), "p_name", "left")
+        nm.join(
+            core.select(F.col("id").alias("p_name"), F.lit(True).alias("in_core")),
+            "p_name",
+            "left",
+        )
         .select(
             "p_name", "blk", F.coalesce("in_core", F.lit(False)).alias("in_core")
         )

@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
-from .relational26 import _name_graph
+from .core import fround, name_graph, query, table
 
 
 @query(
@@ -172,7 +171,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: wedges = Σ deg² over the blocked graph (candidate pairs,
     never all-pairs); degrees broadcast; the anti-join is a shuffle on
     the wedge endpoints."""
-    nm, e0 = _name_graph(spark, sf_dir)
+    nm, e0 = name_graph(spark, sf_dir)
     e = e0.select("src", "dst").localCheckpoint(eager=False)
     deg = (
         e.groupBy(F.col("src").alias("node"))

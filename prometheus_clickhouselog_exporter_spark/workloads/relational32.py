@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, md5_long, money, query, table
+from .core import fround, md5_long, money, name_graph, query, table, triangles
 
 # Prometheus bucket bounds for events.value — the same ladder
 # logpipe_value_histogram (A5 fidelity row) exports.
@@ -291,35 +291,18 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLIQUES (coeff → 1) from similarity CHAINS (coeff → 0) before
     choosing cluster canonicalization strategy.
 
-    Oriented edges (src < dst) build each triangle exactly once; each
-    triangle then credits all three vertices via one in-row explode —
-    no x6 overcount, no distinct. 100 TB: same plan family as the
+    Oriented edges (src < dst, ``core.triangles``) build each triangle
+    exactly once; the degree is a count over the symmetric edge list
+    (``core.name_graph``); each triangle then credits all three vertices
+    via one in-row explode — no x6 overcount, no distinct. 100 TB: same plan family as the
     triangle count (block-bounded edge join), plus one explode and two
     key-shuffled aggregates; degree-ordered orientation bounds fan-out
     by arboricity when blocks stop being small."""
-    p = table(spark, sf_dir, "part").select(
-        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
+    _, e = name_graph(spark, sf_dir)
+    deg = e.groupBy(F.col("src").alias("v")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("degree")
     )
-    nm = p.distinct().localCheckpoint(eager=False)
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e = (
-        a.join(b, "blk")
-        .filter(
-            (F.col("src") < F.col("dst"))
-            & (F.levenshtein(F.col("src"), F.col("dst")) <= 2)
-        )
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
-    und = e.select(F.col("src").alias("v")).unionAll(
-        e.select(F.col("dst").alias("v"))
-    )
-    deg = und.groupBy("v").agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"])
+    tri = triangles(e.filter(F.col("src") < F.col("dst")))
     pertri = tri.select(
         F.explode(F.array(F.col("a"), F.col("b"), F.col("c"))).alias("v")
     )

@@ -6,7 +6,7 @@ families' keep-first rules deliberately avoid — when the product
 question IS "how many distinct entities" (golden records, near-dup
 clusters), min-label propagation over the match graph is the answer,
 and it runs on the same name-similarity graph the LP/SSSP/BFS queries
-share (relational26._name_graph).
+share (core.name_graph).
 
 Reference parity note: /root/reference has no graph, stats, or viz
 surface (query.go:1-289); §2.3 extensions.
@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import min_label_rounds
-from .core import fround, query, table
-from .relational26 import _LP_SQL_GRAPH, _name_graph
+from .core import fround, name_graph, query, table
+from .relational26 import _LP_SQL_GRAPH
 
 _CC_ROUNDS = 4  # >= graph diameter within these vocabulary blocks
 
@@ -74,7 +74,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star (Kiveris et al.; graph_cc_large_small_star)
     to converge in O(log n) rounds on adversarial diameters — same
     per-round shuffle shape, noted not needed at block diameters."""
-    nm, e = _name_graph(spark, sf_dir)
+    nm, e = name_graph(spark, sf_dir)
     seed = nm.select(F.col("p_name").alias("id"), F.col("p_name").alias("label"))
     lab = min_label_rounds(e, seed, _CC_ROUNDS)
     return (

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
+from .core import fround, name_graph, query, table
 
 _LANGS = ("de", "en", "es", "fr", "zh")  # fixed corpus domain (FIXTURES.md)
 
@@ -588,9 +588,8 @@ def graph_cc_large_small_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref cite: none — /root/reference has no graph surface."""
     from ..operators.dedup import large_star, small_star
-    from .relational26 import _name_graph
 
-    nm, e0 = _name_graph(spark, sf_dir)
+    nm, e0 = name_graph(spark, sf_dir)
     # e0 is symmetric: keep one (u, v) row per undirected edge
     E = e0.filter(F.col("src") > F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
+from .core import fround, name_graph, query, table
 
 
 @query(
@@ -56,9 +56,10 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002 eq. 4): the Pearson
     correlation of the degrees at the two ends of each edge — positive
     when hubs link to hubs, negative for hub-and-spoke topologies. Over
-    the part-name similarity graph the graph family shares (blocked
-    levenshtein<=2 self-join; both edge directions present, which makes
-    the directed moment formula equal the undirected coefficient).
+    the part-name similarity graph the graph family shares
+    (``core.name_graph``: blocked levenshtein<=2 self-join; both edge
+    directions present, which makes the directed moment formula equal
+    the undirected coefficient).
 
     All three moments (Σjk, Σ(j+k), Σ(j²+k²)) are exact BIGINT sums;
     doubles appear only in the final ratio — deterministic cross-engine.
@@ -67,23 +68,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree lookups are node-keyed equi-joins (shuffle on node id, the
     same exchange every graph-family operator uses); the coefficient is
     a 1-row integer-moment aggregate. No windows, no iteration."""
-    nm = (
-        table(spark, sf_dir, "part")
-        .select("p_name", F.split("p_name", " ")[1].alias("blk"))
-        .distinct()
-        .localCheckpoint(eager=False)  # both sides of the blocked join
-    )
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e = (
-        a.join(b, "blk")
-        .where(
-            (F.col("src") != F.col("dst"))
-            & (F.levenshtein("src", "dst") <= 2)
-        )
-        .select("src", "dst")
-        .localCheckpoint(eager=False)  # degree census + two lookups
-    )
+    _, e = name_graph(spark, sf_dir)
     deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )

@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import min_label_rounds
-from .core import fround, query, table
-from .relational26 import _LP_SQL_GRAPH, _name_graph
+from .core import fround, name_graph, query, table
+from .relational26 import _LP_SQL_GRAPH
 from .relational42 import _cc_round_sql
 
 # --- Cochran–Armitage trend test ---------------------------------------------
@@ -214,7 +214,7 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     combining (lineage cut per round); the modularity censuses are one
     groupBy over edges joined to labels on the same node-keyed exchange
     the CC rounds already use; the Q fold is community-count-sized."""
-    nm, e = _name_graph(spark, sf_dir)
+    nm, e = name_graph(spark, sf_dir)
     seed = nm.select(F.col("p_name").alias("id"), F.col("p_name").alias("label"))
     lab = min_label_rounds(e, seed, 4)
     la = lab.select(F.col("id").alias("src"), F.col("label").alias("cl_a"))

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
+from .core import fround, name_graph, query, table, triangles
+from .relational26 import _INF, _block_source_distances
 
 
 @query(
@@ -65,7 +66,6 @@ def lateral_topk_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataF
 
 
 _BFS_ROUNDS = 3
-_INF = 999
 
 
 def _bfs_round_sql(prev: str, this: str) -> str:
@@ -116,7 +116,9 @@ def graph_bfs_name_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate keyed by destination. Fixed rounds keep the job graph
     static and the oracle expressible as unrolled SQL; a production run
     loops until a 1-row convergence checksum stops changing (the CC
-    discipline, dedup.py:330-467), checkpointing each round.
+    discipline: ``dedup.connected_components`` probes ``_checksum``
+    around ``min_label_rounds``, the kernel these rounds run with
+    ``weight=1``), checkpointing each round.
 
     100 TB: the graph derives distinct-first so it is vocabulary-sized
     here; on a billion-edge graph each round shuffles O(frontier edges)
@@ -124,58 +126,7 @@ def graph_bfs_name_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round bit-deterministic — no float drift across engines or
     reduction orders.
     """
-    p = table(spark, sf_dir, "part").select(
-        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
-    )
-    # nm and the levenshtein edge list feed multiple graph roles —
-    # checkpoint so the block join runs once (plan audit: part rescans).
-    nm = p.distinct().localCheckpoint(eager=False)
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e = (
-        a.join(b, "blk")
-        .filter(
-            (F.col("src") != F.col("dst"))
-            & (F.levenshtein(F.col("src"), F.col("dst")) <= 2)
-        )
-        .select("src", "dst")
-    )
-    s = nm.groupBy("blk").agg(F.min("p_name").alias("srcname"))
-    dist = nm.join(s, "blk").select(
-        "p_name",
-        "blk",
-        F.when(F.col("p_name") == F.col("srcname"), 0)
-        .otherwise(_INF)
-        .alias("dist"),
-    )
-    for _ in range(_BFS_ROUNDS):
-        relax = (
-            e.join(
-                dist.select(F.col("p_name").alias("src"), F.col("dist").alias("sd")),
-                "src",
-            )
-            .groupBy("dst")
-            .agg((F.min("sd") + 1).alias("nd"))
-        )
-        dist = (
-            dist.join(relax, dist["p_name"] == relax["dst"], "left")
-            .select(
-                "p_name",
-                "blk",
-                F.least(F.col("dist"), F.coalesce(F.col("nd"), F.lit(_INF))).alias(
-                    "dist"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return dist.select(
-        "p_name",
-        "blk",
-        F.when(F.col("dist") >= _INF, -1)
-        .otherwise(F.col("dist"))
-        .cast("long")
-        .alias("dist"),
-    )
+    return _block_source_distances(spark, sf_dir, _BFS_ROUNDS, F.lit(1))
 
 
 @query(
@@ -345,8 +296,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting per block over the name-similarity graph — the
     fourth member of the graph family (components, PageRank, BFS): the
     clustering-coefficient numerator a dedup pipeline inspects to tell
-    tight duplicate cliques from chains. Uses the ORIENTED-edge trick:
-    edges are kept only as src < dst, so each triangle a<b<c is built
+    tight duplicate cliques from chains. Uses the ORIENTED-edge trick
+    (``core.triangles``): edges are kept only as src < dst, so each triangle a<b<c is built
     exactly once by joining (a,b)+(b,c) and closing with (a,c) — no
     ×6 overcount, no post-hoc distinct.
 
@@ -357,27 +308,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     their lowest vertex's block (blocks are components here, so all
     three vertices share it). Integer-exact.
     """
-    p = table(spark, sf_dir, "part").select(
-        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
-    )
-    # nm and the levenshtein edge list feed multiple graph roles —
-    # checkpoint so the block join runs once (plan audit: part rescans).
-    nm = p.distinct().localCheckpoint(eager=False)
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e = (
-        a.join(b, "blk")
-        .filter(
-            (F.col("src") < F.col("dst"))
-            & (F.levenshtein(F.col("src"), F.col("dst")) <= 2)
-        )
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
-    e1 = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"]).select("a")
+    nm, e = name_graph(spark, sf_dir)
+    tri = triangles(e.filter(F.col("src") < F.col("dst"))).select("a")
     return (
         nm.join(tri, nm["p_name"] == tri["a"], "left")
         .groupBy("blk")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, query, table
+from .core import fround, name_graph, query, table, triangles
 
 # --- STL-lite seasonal/trend strength --------------------------------------------
 
@@ -579,11 +579,12 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     number) and full clique finding (NP-hard); in a dedup pipeline the
     truss separates genuine duplicate cliques from levenshtein chains.
     Peeling reuses the ORIENTED-edge triangle scheme
-    (graph_triangle_count): each triangle a<b<c is found once by the
-    two-path + closing-edge join and credits all three edges. Four
-    rounds unroll in ONE lazy plan (no convergence actions; the
-    per-block ``converged`` column certifies round 3 = round 4 IN the
-    hash). Integer-exact throughout.
+    (``core.triangles``, as graph_triangle_count): each triangle a<b<c
+    is found once by the two-path + closing-edge join and credits all
+    three edges. Four rounds unroll in ONE lazy plan (no convergence
+    actions; the per-block ``converged`` column certifies round 3 =
+    round 4 IN the hash), and the block is read off the source name
+    only in the final group. Integer-exact throughout.
 
     100 TB: per round one self-join bounded by block-local degree (the
     levenshtein blocks cap fan-out) + one edge-keyed count; lineage is
@@ -591,28 +592,12 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     arboricity bound) are the documented dial if blocks ever skew.
 
     Ref cite: none — §2.3 graph territory."""
-    p = table(spark, sf_dir, "part").select(
-        "p_name", F.split("p_name", " ").getItem(1).alias("blk")
-    )
-    nm = p.distinct().localCheckpoint(eager=False)
-    a = nm.select(F.col("p_name").alias("src"), "blk")
-    b = nm.select(F.col("p_name").alias("dst"), "blk")
-    e0 = (
-        a.join(b, "blk")
-        .filter(
-            (F.col("src") < F.col("dst"))
-            & (F.levenshtein(F.col("src"), F.col("dst")) <= 2)
-        )
-        .select("src", "dst", "blk")
-        .localCheckpoint(eager=False)
-    )
+    _, e = name_graph(spark, sf_dir)
+    e0 = e.filter(F.col("src") < F.col("dst")).select("src", "dst")
     edges = [e0]
     cur = e0
     for _ in range(_TRUSS_ROUNDS):
-        e1 = cur.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        e2 = cur.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-        e3 = cur.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-        tri = e1.join(e2, "b").join(e3, ["a", "c"])
+        tri = triangles(cur)
         sup = (
             tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .unionAll(
@@ -625,10 +610,8 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("s"))
             .where(F.col("s") >= _TRUSS_K - 2)
         )
-        cur = (
-            cur.join(sup.select("src", "dst"), ["src", "dst"])
-            .select("src", "dst", "blk")
-            .localCheckpoint(eager=False)
+        cur = cur.join(sup.select("src", "dst"), ["src", "dst"]).localCheckpoint(
+            eager=False
         )
         edges.append(cur)
     fin = edges[-1].select(
@@ -650,7 +633,7 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        z.groupBy("blk")
+        z.groupBy(F.split("src", " ").getItem(1).alias("blk"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_edges_0"),
             F.count("fsrc").cast("bigint").alias("n_edges_truss"),

@@ -1,6 +1,9 @@
 """Unit tests for the pipeline operators the oracle exercises only at
-corpus level: connected-components corner graphs and the deterministic
-sampler's structural guarantees (partition independence, nesting)."""
+corpus level: connected-components corner graphs, the shared graph
+kernels on hand graphs (the fixture name graph has no triangle and an
+empty 3-core, so the oracle cannot tell a wrong triangle or peel kernel
+from a right one), and the deterministic sampler's structural
+guarantees (partition independence, nesting)."""
 
 from __future__ import annotations
 
@@ -17,6 +20,13 @@ from prometheus_clickhouselog_exporter_spark.operators.sampling import (
     hash_bucket,
     stratified_sample,
 )
+from prometheus_clickhouselog_exporter_spark.workloads.core import (
+    kcore_rounds,
+    name_graph,
+    triangles,
+)
+
+from conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -115,6 +125,91 @@ def test_min_label_rounds_string_ids_and_isolated_seed(spark):
     )
     got = {r["id"]: r["label"] for r in min_label_rounds(e, seed, 3).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "z": "z"}
+
+
+def test_min_label_rounds_weight_relaxes_min_plus(spark):
+    # s-a-t costs 1+1, the direct s-t edge 3; u has no edge. One round
+    # only sees the direct edge; two find the cheaper two-hop path. The
+    # unreachable node keeps its 999 seed. weight=1 counts hops instead.
+    path = [("s", "a", 1), ("a", "t", 1), ("s", "t", 3)]
+    e = spark.createDataFrame(
+        path + [(b, a, w) for a, b, w in path], "src string, dst string, w int"
+    )
+    seed = spark.createDataFrame(
+        [("s", 0), ("a", 999), ("t", 999), ("u", 999)], "id string, label int"
+    )
+
+    def dist(rounds, weight):
+        out = min_label_rounds(e, seed, rounds, weight=weight)
+        return {r["id"]: r["label"] for r in out.collect()}
+
+    assert dist(1, F.col("w")) == {"s": 0, "a": 1, "t": 3, "u": 999}
+    assert dist(2, F.col("w")) == {"s": 0, "a": 1, "t": 2, "u": 999}
+    assert dist(2, F.lit(1)) == {"s": 0, "a": 1, "t": 1, "u": 999}
+
+
+def _oriented(spark, edges, id_type="bigint"):
+    return spark.createDataFrame(
+        [(min(a, b), max(a, b)) for a, b in edges], f"src {id_type}, dst {id_type}"
+    )
+
+
+_K4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+
+
+def test_triangles_k4_plus_pendant(spark):
+    # exactly the four a<b<c triangles of the K4, none repeated; the
+    # pendant edge closes none
+    rows = [tuple(r) for r in triangles(_oriented(spark, _K4 + [(4, 5)])).collect()]
+    assert sorted(rows) == [(1, 2, 3), (1, 2, 4), (1, 3, 4), (2, 3, 4)]
+
+
+def test_triangles_four_cycle_has_none(spark):
+    assert triangles(_oriented(spark, [(1, 2), (2, 3), (3, 4), (1, 4)])).count() == 0
+
+
+def test_kcore_rounds_peels_synchronously(spark):
+    # K4 on a-d (degree 3 each, d 4), tendril d-e-f, isolated z; k=3.
+    # Round 1 drops e (degree 2) and f (degree 1) together and z (no
+    # edge); the K4 is the fixpoint.
+    name = "abcd"
+    edges = [(name[a - 1], name[b - 1]) for a, b in _K4] + [("d", "e"), ("e", "f")]
+    nodes = spark.createDataFrame([(n,) for n in "abcdefz"], "id string")
+    frames = kcore_rounds(_oriented(spark, edges, "string"), nodes, 3, 2)
+    assert len(frames) == 3 and frames[0] is nodes
+    ids = [sorted(r["id"] for r in f.collect()) for f in frames]
+    assert ids == [list("abcdefz"), list("abcd"), list("abcd")]
+
+
+def _levenshtein(a, b):
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_name_graph_contract(spark):
+    # symmetric, loop-free, w = levenshtein in {1, 2}, endpoints in one
+    # block — and every such same-block pair present
+    nm, e = name_graph(spark, SF_DIR)
+    blk = {r["p_name"]: r["blk"] for r in nm.collect()}
+    assert len(blk) == nm.count()
+    assert all(b == n.split(" ")[1] for n, b in blk.items())
+    w = {(r["src"], r["dst"]): r["w"] for r in e.collect()}
+    assert e.count() == len(w) > 0
+    for (a, b), wt in w.items():
+        assert w.get((b, a)) == wt
+        assert a != b and blk[a] == blk[b]
+        assert wt == _levenshtein(a, b) and wt in (1, 2)
+    assert set(w) == {
+        (a, b)
+        for a in blk
+        for b in blk
+        if a != b and blk[a] == blk[b] and _levenshtein(a, b) <= 2
+    }
 
 
 def test_sample_partition_independent(spark, docs_sf001):

@@ -12,11 +12,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_connected_components_match_union_find(spark):
     """4 min-label rounds must reach the TRUE fixpoint: compare the
     census against a driver-side union-find over the same edge list."""
-    from prometheus_clickhouselog_exporter_spark.workloads.relational26 import (
-        _name_graph,
-    )
+    from prometheus_clickhouselog_exporter_spark.workloads.core import name_graph
 
-    nm, e = _name_graph(spark, SF_DIR)
+    nm, e = name_graph(spark, SF_DIR)
     nodes = [r.p_name for r in nm.select("p_name").collect()]
     parent = {n: n for n in nodes}
 

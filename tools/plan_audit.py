@@ -26,7 +26,9 @@ excessive eager work.
 Usage: python tools/plan_audit.py [sf_dir] [name ...]
 Prints one line per query: scans-per-table, exchange count, join kinds,
 and a FLAG column when a smell triggers. Exit code = number of
-global-window violations (other smells stay report-only).
+global-window violations plus queries that fail to build (other smells
+stay report-only); names the registry does not know exit 1 before Spark
+starts.
 """
 
 from __future__ import annotations
@@ -435,13 +437,20 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:]
 
-    from prometheus_clickhouselog_exporter_spark.session import get_spark
     from prometheus_clickhouselog_exporter_spark.workloads import QUERIES
+
+    unknown = sorted(set(names) - set(QUERIES))
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        sys.exit(1)
+
+    from prometheus_clickhouselog_exporter_spark.session import get_spark
 
     spark = get_spark("plan_audit", cores=8, shuffle_partitions=8)
     targets = names or sorted(QUERIES)
     flagged = 0
     violations = 0
+    build_errors = 0
     skipped = []
     for name in targets:
         # *_fidelity queries EXECUTE a full Structured Streaming pipeline
@@ -464,6 +473,7 @@ def main() -> None:
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # pragma: no cover - reporting tool
             print(f"{name}: BUILD-ERROR {type(e).__name__}: {e}")
+            build_errors += 1
             continue
         tables = Counter(
             m.group(1)
@@ -504,10 +514,11 @@ def main() -> None:
         )
     print(
         f"# flagged: {flagged}/{len(targets)} (global-window violations: "
-        f"{violations}; {len(skipped)} *_fidelity skipped — streaming "
-        f"executions, audited by their golden suites)"
+        f"{violations}; build errors: {build_errors}; {len(skipped)} "
+        f"*_fidelity skipped — streaming executions, audited by their "
+        f"golden suites)"
     )
-    sys.exit(min(violations, 125))
+    sys.exit(min(violations + build_errors, 125))
 
 
 if __name__ == "__main__":
