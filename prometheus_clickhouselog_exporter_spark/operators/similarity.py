@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.tables import memo, session_tmpdir
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
@@ -155,6 +157,53 @@ def lsh_bucketed_topk(
     )
 
 
+def _coarse_centroids(
+    corpus: DataFrame, c: DataFrame, n_centroids: int, seed: int, train_cache_key=None
+) -> np.ndarray:
+    """The coarse quantizer of ivf_topk and hnsw_topk, (C, dim) centroids
+    over ``c`` = ``corpus``'s (nbr_id, normalized _cv) rows; equal
+    hyperparameters share one fit per session.
+
+    It trains on a bounded sample, never the full corpus: ~256
+    vectors/centroid (the FAISS guideline), selected by ordering on a
+    seeded hash of the id and taking the first max(2048, 256·C). That plans
+    as TakeOrderedAndProject — per-partition top-K + one merge, a SINGLE
+    scan — so there is no count() prerequisite job and no full-sort
+    shuffle, yet the sample is uniform (hash order ⊥ storage order) and
+    deterministic across retries. At 100 TB KMeans still sees that many.
+    Above ``_DIST_TRAIN_DOCS`` rows the corpus-scale arm runs Lloyd rounds
+    as Spark jobs; only k×dim statistics reach the driver (see
+    distributed_lloyd)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    def fit() -> np.ndarray:
+        if _exceeds(c, _DIST_TRAIN_DOCS):
+            return distributed_lloyd(c, "_cv", "nbr_id", n_centroids, seed)
+        train = (
+            c.orderBy(F.xxhash64(F.col("nbr_id"), F.lit(seed)))
+            .limit(max(2048, 256 * n_centroids))
+            .select(array_to_vector(F.col("_cv")).alias("features"))
+        )
+        model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
+        return np.vstack([np.asarray(x) for x in model.clusterCenters()])
+
+    return _trained(corpus, fit, "coarse", n_centroids, seed, explicit=train_cache_key)
+
+
+def _cell_udf(centroids: np.ndarray, n_cells: int):
+    """Pandas UDF: normalized vector → its ``n_cells`` nearest cells
+    (cosine order == dot order against the centroid matrix)."""
+
+    @F.pandas_udf("array<int>")
+    def cells(vecs: pd.Series) -> pd.Series:
+        m = np.vstack(vecs.to_numpy())
+        order = np.argsort(-(m @ centroids.T), axis=1)[:, :n_cells].astype(np.int32)
+        return pd.Series(list(order))
+
+    return cells
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -177,55 +226,12 @@ def ivf_topk(
     join shuffles on cell id, touching n_probe/n_centroids of the corpus
     per query — the standard FAISS-style recall/cost dial.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     c_norm = corpus.select(F.col(id_col).alias("nbr_id"), normalize(F.col(vec_col)).alias("_cv"))
-    # Quantizer trains on a bounded sample, never the full corpus: ~256
-    # vectors/centroid (the FAISS guideline), selected by ordering on a
-    # seeded hash of the id and taking the first max_train rows. That plans
-    # as TakeOrderedAndProject — per-partition top-K + one merge, a SINGLE
-    # scan — so there is no count() prerequisite job and no full-sort
-    # shuffle, yet the sample is uniform (hash order ⊥ storage order) and
-    # deterministic across retries. At 100 TB KMeans still sees ≤max_train.
-    max_train = max(2048, 256 * n_centroids)
-    # shared with hnsw_topk's coarse layer (identical normalize + seeded
-    # hash-order sample + KMeans discipline), so equal hyperparameters
-    # share one fit per session
-    ck = _train_key(corpus, "coarse", n_centroids, seed, explicit=train_cache_key)
-    if ck is not None and ck in _TRAIN_CACHE:
-        centroids = _TRAIN_CACHE[ck]
-    elif _exceeds(c_norm, _DIST_TRAIN_DOCS):
-        # corpus-scale arm: Lloyd rounds as Spark jobs; only k×dim
-        # statistics reach the driver (see distributed_lloyd)
-        centroids = distributed_lloyd(c_norm, "_cv", "nbr_id", n_centroids, seed)
-        if ck is not None:
-            _TRAIN_CACHE[ck] = centroids
-    else:
-        train = (
-            c_norm.orderBy(F.xxhash64(F.col("nbr_id"), F.lit(seed)))
-            .limit(max_train)
-            .select(array_to_vector(F.col("_cv")).alias("features"))
-        )
-        model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-        centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])  # (C, dim)
-        if ck is not None:
-            _TRAIN_CACHE[ck] = centroids
-
-    def cell_udf(n_cells: int):
-        @F.pandas_udf("array<int>")
-        def cells(vecs: pd.Series) -> pd.Series:
-            m = np.vstack(vecs.to_numpy())
-            sims = m @ centroids.T  # cosine order == dot order (all normalized-ish)
-            order = np.argsort(-sims, axis=1)[:, :n_cells].astype(np.int32)
-            return pd.Series(list(order))
-
-        return cells
-
-    assigned = c_norm.withColumn("_cell", F.element_at(cell_udf(1)(F.col("_cv")), 1))
+    centroids = _coarse_centroids(corpus, c_norm, n_centroids, seed, train_cache_key)
+    assigned = c_norm.withColumn("_cell", F.element_at(_cell_udf(centroids, 1)(F.col("_cv")), 1))
     probed = (
         queries.select(F.col(query_id_col).alias("query_id"), normalize(F.col(vec_col)).alias("_qv"))
-        .withColumn("_cell", F.explode(cell_udf(n_probe)(F.col("_qv"))))
+        .withColumn("_cell", F.explode(_cell_udf(centroids, n_probe)(F.col("_qv"))))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
     return (
@@ -258,41 +264,24 @@ def pq_train_codebooks(
     Deterministic: seeded init, fixed iteration count.
     Returns an (n_sub, n_centroids, dim/n_sub) numpy tensor."""
     sub_dim = dim // n_sub
-    max_train = max(2048, 64 * n_centroids)
-    ck = _train_key(corpus, "pq", dim, n_sub, n_centroids, seed,
-                    explicit=train_cache_key)
-    if ck is not None and ck in _TRAIN_CACHE:
-        return _TRAIN_CACHE[ck]
-    sample = (
-        corpus.select(F.col(id_col).alias("_id"), normalize(F.col(vec_col)).alias("_v"))
-        .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)))
-        .limit(max_train)
-        .collect()
-    )
-    m = np.vstack([np.asarray(r["_v"], dtype=np.float64) for r in sample])
-    books = []
-    for s in range(n_sub):
-        x = m[:, s * sub_dim : (s + 1) * sub_dim]
-        rng = np.random.default_rng(seed + s)
-        k = min(n_centroids, len(x))
-        cent = x[rng.choice(len(x), k, replace=False)]
-        x_sq = (x**2).sum(1)[:, None]
-        for _ in range(15):
-            # GEMM distance form: ||x-c||² = ||x||² - 2x·c + ||c||²
-            d = x_sq - 2 * x @ cent.T + (cent**2).sum(1)[None, :]
-            assign = np.argmin(d, axis=1)
-            sums = np.zeros_like(cent)
-            np.add.at(sums, assign, x)
-            counts = np.bincount(assign, minlength=k).astype(np.float64)
-            nz = counts > 0
-            cent[nz] = sums[nz] / counts[nz, None]
-        if k < n_centroids:  # degenerate tiny corpus: pad by repetition
-            cent = np.vstack([cent, cent[: n_centroids - k]])
-        books.append(cent)
-    out = np.stack(books)  # (n_sub, n_centroids, sub_dim)
-    if ck is not None:
-        _TRAIN_CACHE[ck] = out
-    return out
+
+    def fit() -> np.ndarray:
+        sample = (
+            corpus.select(F.col(id_col).alias("_id"), normalize(F.col(vec_col)).alias("_v"))
+            .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)))
+            .limit(max(2048, 64 * n_centroids))
+            .collect()
+        )
+        m = np.vstack([np.asarray(r["_v"], dtype=np.float64) for r in sample])
+        books = []
+        for s in range(n_sub):
+            cent = _lloyd(m[:, s * sub_dim : (s + 1) * sub_dim], n_centroids, seed + s)
+            if len(cent) < n_centroids:  # degenerate tiny corpus: pad by repetition
+                cent = np.vstack([cent, cent[: n_centroids - len(cent)]])
+            books.append(cent)
+        return np.stack(books)  # (n_sub, n_centroids, sub_dim)
+
+    return _trained(corpus, fit, "pq", dim, n_sub, n_centroids, seed, explicit=train_cache_key)
 
 
 def pq_adc_topk(
@@ -399,66 +388,42 @@ def _exceeds(df: DataFrame, threshold: int) -> bool:
     return df.limit(threshold + 1).count() > threshold
 
 
-# Session-scoped trainer cache (r11, the fidelity-corpus-cache argument
-# applied to index builds): every quantizer here is a DETERMINISTIC
-# function of (corpus files, hyperparameters, seed) — seeded sampling by
-# id-hash order, seeded k-means, fixed iteration counts — yet each
-# invocation re-trained it, and the bench's warm-up + min-of-2 protocol
-# trains each index three times per query. A real deployment trains an
-# ANN index once and serves many query batches; per-run retraining was
-# harness overhead, never engine cost. Keys carry the corpus's file
-# provenance, so in-memory test frames (no files) are NEVER cached — a
-# content-less key could alias two different corpora — and recall/pytest
-# suites that build tmp parquet corpora get distinct path-based keys.
-# r12 (VERDICT r11 #3): explicit keys from the workload layer are built
-# by ``workloads.core.corpus_key`` and embed the source table's file
-# listing (path, mtime_ns, size), so an in-place overwrite of the
-# corpus parquet under the SAME path is a cache miss — the trainer
-# retrains instead of serving stale centroids. Implicit keys (from
-# ``df.inputFiles()``) already carried paths; they remain path-only by
-# construction of the file-source plan (a rewritten file set changes
-# the listing).
-_TRAIN_CACHE: dict[tuple, object] = {}
-
-# Materialized-index cache (same argument, for index structures too big
-# to hold as driver tensors): the kNN edge LIST behind the graph/beam/
-# hnsw rungs is a deterministic function of (corpus, LSH params, degree)
-# and re-built per invocation; on first build per key it is written once
-# to a session tempdir (atexit-cleaned) and re-read thereafter.
-_INDEX_CACHE_BASE: list[str] = []
-
-
-def _index_cache_path(key: tuple) -> str:
-    import atexit
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    if not _INDEX_CACHE_BASE:
-        base = tempfile.mkdtemp(prefix="ann-index-cache-")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        _INDEX_CACHE_BASE.append(base)
-    h = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    return os.path.join(_INDEX_CACHE_BASE[0], f"edges-{h}")
-
-
+# Session-scoped index structures (r11, the fidelity-corpus-cache
+# argument applied to index builds): every quantizer and edge list here
+# is a DETERMINISTIC function of (corpus files, hyperparameters, seed) —
+# seeded sampling by id-hash order, seeded k-means, fixed iteration
+# counts — yet each invocation re-trained it, and the bench's warm-up +
+# min-of-2 protocol trains each index three times per query. A real
+# deployment trains an ANN index once and serves many query batches;
+# per-run retraining was harness overhead, never engine cost. They are
+# memoized through ``tables.memo``. In-memory test frames (no files) are
+# NEVER cached — a content-less key could alias two different corpora.
 def _train_key(df: DataFrame, *parts, explicit=None):
-    """Cache key = hyperparameters + corpus identity. Identity comes from
-    the caller's ``explicit`` key when given (the workload layer knows
-    its sf_dir; a localCheckpoint'd corpus has NO file provenance — its
-    plan is a LogicalRDD and inputFiles() is empty), else from the
-    DataFrame's input files. None (cache disabled) when neither exists:
-    a content-less key could alias two different in-memory corpora."""
+    """Memo (slot, version) of an index structure: the kind and
+    hyperparameters ``parts`` plus the corpus identity. Identity comes
+    from the caller's ``explicit`` key when given — a
+    ``workloads.core.corpus_key`` (table, sf_dir, file provenance), whose
+    provenance is the version, so an in-place overwrite of the corpus
+    parquet rebuilds; a localCheckpoint'd corpus has NO file provenance
+    (its plan is a LogicalRDD and inputFiles() is empty) — else from the
+    DataFrame's input files (a rewritten file set changes the listing).
+    None (cache disabled) when neither exists."""
     if explicit is not None:
-        return ("explicit", tuple(explicit)) + parts
+        *identity, version = explicit
+        return (*parts, *identity), version
     try:
         files = tuple(sorted(df.inputFiles()))
     except Exception:  # pragma: no cover - defensive
         return None
     if not files:
         return None
-    return parts + (files,)
+    return (*parts, files), None
+
+
+def _trained(df: DataFrame, build, *parts, explicit=None):
+    """``build()``, memoized under ``_train_key(df, *parts, explicit)``."""
+    key = _train_key(df, *parts, explicit=explicit)
+    return build() if key is None else memo(*key, build)
 
 
 def distributed_lloyd(
@@ -572,11 +537,8 @@ def ivfpq_topk(
     norm_corpus = corpus.select(
         F.col(id_col).alias("_id"), normalize(F.col(vec_col)).alias("_v")
     )
-    ck = _train_key(corpus, "ivfpq", dim, n_cells, n_sub, n_centroids, seed,
-                    explicit=train_cache_key)
-    if ck is not None and ck in _TRAIN_CACHE:
-        coarse, books = _TRAIN_CACHE[ck]
-    else:
+
+    def fit():
         sample_rows = (
             norm_corpus.orderBy(F.xxhash64(F.col("_id"), F.lit(seed)))
             .limit(max_train)
@@ -610,8 +572,12 @@ def ivfpq_topk(
                 for s in range(n_sub)
             ]
         )  # (n_sub, n_centroids, sub_dim)
-        if ck is not None:
-            _TRAIN_CACHE[ck] = (coarse, books)
+        return coarse, books
+
+    coarse, books = _trained(
+        corpus, fit, "ivfpq", dim, n_cells, n_sub, n_centroids, seed,
+        explicit=train_cache_key,
+    )
 
     def encode(batches):
         for pdf in batches:
@@ -703,16 +669,15 @@ def _lsh_candidate_graph(
     (c_base, q_base, base candidates, top-degree edges), each
     checkpointed so the corpus is normalized/bucketed ONCE (plan audit:
     embeddings was rescanned 10x through recomputed lineage)."""
-    bucketer = _sign_buckets_udf(dim, n_planes, n_tables, seed)
     c_base = corpus.select(
         F.col(id_col).alias("nbr_id"), normalize(F.col(vec_col)).alias("_cv")
     ).localCheckpoint(eager=False)
     q_base = queries.select(
         F.col(query_id_col).alias("query_id"), normalize(F.col(vec_col)).alias("_qv")
     ).localCheckpoint(eager=False)
-    c_ids = c_base.withColumn("_bucket", F.explode(bucketer(F.col("_cv")))).select(
-        "nbr_id", "_bucket"
-    ).localCheckpoint(eager=False)
+    bucketer, c_ids, edges = _bucket_graph(
+        corpus, c_base, dim, n_planes, n_tables, graph_degree, seed, train_cache_key
+    )
     q_ids = q_base.withColumn("_bucket", F.explode(bucketer(F.col("_qv")))).select(
         "query_id", "_bucket"
     )
@@ -723,14 +688,33 @@ def _lsh_candidate_graph(
         .dropDuplicates(["query_id", "nbr_id"])
         .localCheckpoint(eager=False)
     )
-    ek = (
-        None
-        if train_cache_key is None
-        else ("edges", tuple(train_cache_key), dim, n_planes, n_tables,
-              graph_degree, seed)
-    )
-    edges = _knn_edges(c_base, c_ids, graph_degree, cache_key=ek)
     return c_base, q_base, base, edges
+
+
+def _bucket_graph(
+    corpus: DataFrame,
+    c_base: DataFrame,
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    graph_degree: int,
+    seed: int,
+    train_cache_key=None,
+):
+    """The base-layer index of the graph/beam/hnsw rungs over ``c_base``
+    (``corpus``'s normalized rows): (bucketer, c_ids = the checkpointed
+    (nbr_id, _bucket) explode, top-degree kNN edges). With
+    ``train_cache_key`` the edge list is memoized, shared by every rung
+    at equal LSH parameters and degree."""
+    bucketer = _sign_buckets_udf(dim, n_planes, n_tables, seed)
+    c_ids = c_base.withColumn("_bucket", F.explode(bucketer(F.col("_cv")))).select(
+        "nbr_id", "_bucket"
+    ).localCheckpoint(eager=False)
+    ek = None if train_cache_key is None else _train_key(
+        corpus, "edges", dim, n_planes, n_tables, graph_degree, seed,
+        explicit=train_cache_key,
+    )
+    return bucketer, c_ids, _knn_edges(c_base, c_ids, graph_degree, cache_key=ek)
 
 
 def _knn_edges(
@@ -742,39 +726,43 @@ def _knn_edges(
     """In-bucket approximate kNN graph over the corpus: bucket self-join
     proposes candidate edges (ids only), vectors rejoin once per distinct
     pair, WindowGroupLimit keeps the top-``graph_degree`` per node.
-    With ``cache_key`` the edge list persists to the session index cache
-    (deterministic: set-semantics candidates, cos-desc/dst tie-break)."""
-    import os
+    With ``cache_key`` (a ``memo`` (slot, version)) the edge list is
+    written once as parquet under the session tmpdir, which is removed
+    at exit, and re-read thereafter (deterministic: set-semantics
+    candidates, cos-desc/dst tie-break). The memo records the path only
+    after the write returns: a failed write is rebuilt by the next call."""
 
-    spark = c_base.sparkSession
-    if cache_key is not None:
-        path = _index_cache_path(cache_key)
-        if os.path.exists(path):
-            return spark.read.parquet(path)
-    a = c_ids.select(F.col("nbr_id").alias("src"), "_bucket")
-    b = c_ids.select(F.col("nbr_id").alias("dst"), "_bucket")
-    cand_edges = (
-        a.join(b, ["_bucket"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    sv = c_base.select(F.col("nbr_id").alias("src"), F.col("_cv").alias("_sv"))
-    dv = c_base.select(F.col("nbr_id").alias("dst"), F.col("_cv").alias("_dv"))
-    wg = Window.partitionBy("src").orderBy(F.col("edge_cos").desc(), F.col("dst"))
-    edges = (
-        cand_edges.join(sv, "src")
-        .join(dv, "dst")
-        .withColumn("edge_cos", dot(F.col("_sv"), F.col("_dv")))
-        .withColumn("erk", F.row_number().over(wg))
-        .filter(F.col("erk") <= graph_degree)
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
-    )
-    if cache_key is not None:
-        edges.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-    return edges
+    def build() -> DataFrame:
+        a = c_ids.select(F.col("nbr_id").alias("src"), "_bucket")
+        b = c_ids.select(F.col("nbr_id").alias("dst"), "_bucket")
+        cand_edges = (
+            a.join(b, ["_bucket"])
+            .filter(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+            .dropDuplicates(["src", "dst"])
+        )
+        sv = c_base.select(F.col("nbr_id").alias("src"), F.col("_cv").alias("_sv"))
+        dv = c_base.select(F.col("nbr_id").alias("dst"), F.col("_cv").alias("_dv"))
+        wg = Window.partitionBy("src").orderBy(F.col("edge_cos").desc(), F.col("dst"))
+        return (
+            cand_edges.join(sv, "src")
+            .join(dv, "dst")
+            .withColumn("edge_cos", dot(F.col("_sv"), F.col("_dv")))
+            .withColumn("erk", F.row_number().over(wg))
+            .filter(F.col("erk") <= graph_degree)
+            .select("src", "dst")
+            .localCheckpoint(eager=False)
+        )
+
+    if cache_key is None:
+        return build()
+
+    def write() -> str:
+        path = f"{session_tmpdir('ann-edges-')}/edges"
+        build().write.mode("overwrite").parquet(path)
+        return path
+
+    return c_base.sparkSession.read.parquet(memo(*cache_key, write))
 
 
 def graph_expand_topk(
@@ -1039,9 +1027,6 @@ def hnsw_topk(
     buys. Deeper hierarchies (cells-of-cells) compose the same way; one
     coarse layer suffices until C itself stops fitting a broadcast.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     c_base = corpus.select(
         F.col(id_col).alias("nbr_id"), normalize(F.col(vec_col)).alias("_cv")
     ).localCheckpoint(eager=False)
@@ -1059,77 +1044,30 @@ def hnsw_topk(
         # scan is shared); knobs stay capped so per-query work remains
         # O(beam·degree·hops) ids, independent of corpus size beyond
         # the occupancy plateau.
-        nk = _train_key(corpus, "rowcount", explicit=train_cache_key)
-        if nk is not None and nk in _TRAIN_CACHE:
-            n_rows = _TRAIN_CACHE[nk]
-        else:
-            n_rows = c_base.count()
-            if nk is not None:
-                _TRAIN_CACHE[nk] = n_rows
+        n_rows = _trained(corpus, c_base.count, "rowcount", explicit=train_cache_key)
         occupancy = n_rows / max(1, n_centroids)
         entry_per_cell = max(entry_per_cell, min(32, int(occupancy * 0.4 + 0.999)))
         beam = max(beam, min(48, int(occupancy * 0.65 + 0.999)))
         if occupancy > 32:
             hops += 1
 
-    # --- index build (amortized): base-layer kNN graph via LSH buckets
-    bucketer = _sign_buckets_udf(dim, n_planes, n_tables, seed)
-    c_ids = c_base.withColumn(
-        "_bucket", F.explode(bucketer(F.col("_cv")))
-    ).select("nbr_id", "_bucket").localCheckpoint(eager=False)
-    ek = (
-        None
-        if train_cache_key is None
-        else ("edges", tuple(train_cache_key), dim, n_planes, n_tables,
-              graph_degree, seed)
+    # --- index build (amortized): base-layer kNN graph via LSH buckets,
+    # then the coarse layer (IVF discipline; shared with ivf_topk at equal
+    # hyperparameters)
+    _, _, edges = _bucket_graph(
+        corpus, c_base, dim, n_planes, n_tables, graph_degree, seed, train_cache_key
     )
-    edges = _knn_edges(c_base, c_ids, graph_degree, cache_key=ek)
+    centroids = _coarse_centroids(corpus, c_base, n_centroids, seed, train_cache_key)
 
-    # --- index build: coarse layer (size-dispatched, IVF discipline;
-    # session-cached, shared with ivf_topk at equal hyperparameters)
-    max_train = max(2048, 256 * n_centroids)
-    ck = _train_key(corpus, "coarse", n_centroids, seed, explicit=train_cache_key)
-    if ck is not None and ck in _TRAIN_CACHE:
-        centroids = _TRAIN_CACHE[ck]
-    elif _exceeds(c_base, _DIST_TRAIN_DOCS):
-        centroids = distributed_lloyd(c_base, "_cv", "nbr_id", n_centroids, seed)
-        if ck is not None:
-            _TRAIN_CACHE[ck] = centroids
-    else:
-        train = (
-            c_base.orderBy(F.xxhash64(F.col("nbr_id"), F.lit(seed)))
-            .limit(max_train)
-            .select(array_to_vector(F.col("_cv")).alias("features"))
-        )
-        model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-        centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-        if ck is not None:
-            _TRAIN_CACHE[ck] = centroids
-
-    def cell_udf(n_cells: int):
-        @F.pandas_udf("array<int>")
-        def cells(vecs: pd.Series) -> pd.Series:
-            m = np.vstack(vecs.to_numpy())
-            sims = m @ centroids.T
-            order = np.argsort(-sims, axis=1)[:, :n_cells].astype(np.int32)
-            return pd.Series(list(order))
-
-        return cells
-
-    def cell_sim_udf():
-        @F.pandas_udf("double")
-        def sim(vecs: pd.Series, cell: pd.Series) -> pd.Series:
-            m = np.vstack(vecs.to_numpy())
-            return pd.Series(
-                np.einsum("ij,ij->i", m, centroids[cell.to_numpy()])
-            )
-
-        return sim
+    @F.pandas_udf("double")
+    def cell_sim(vecs: pd.Series, cell: pd.Series) -> pd.Series:
+        m = np.vstack(vecs.to_numpy())
+        return pd.Series(np.einsum("ij,ij->i", m, centroids[cell.to_numpy()]))
 
     # entry nodes: per cell, the entry_per_cell members nearest the centroid
     assigned = c_base.withColumn(
-        "_cell", F.element_at(cell_udf(1)(F.col("_cv")), 1)
-    ).withColumn("_csim", cell_sim_udf()(F.col("_cv"), F.col("_cell")))
+        "_cell", F.element_at(_cell_udf(centroids, 1)(F.col("_cv")), 1)
+    ).withColumn("_csim", cell_sim(F.col("_cv"), F.col("_cell")))
     wc = Window.partitionBy("_cell").orderBy(F.col("_csim").desc(), F.col("nbr_id"))
     entry_nodes = (
         assigned.withColumn("crk", F.row_number().over(wc))
@@ -1140,7 +1078,7 @@ def hnsw_topk(
 
     # --- search: layer 1 (broadcast centroid scoring), then layer 0
     probed = q_base.withColumn(
-        "_cell", F.explode(cell_udf(n_probe)(F.col("_qv")))
+        "_cell", F.explode(_cell_udf(centroids, n_probe)(F.col("_qv")))
     ).select("query_id", "_cell")
     entries = (
         probed.join(F.broadcast(entry_nodes), "_cell")

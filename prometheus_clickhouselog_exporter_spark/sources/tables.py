@@ -9,6 +9,10 @@ gets partition pruning + predicate pushdown for free.
 
 from __future__ import annotations
 
+import itertools
+
+from pyspark import SparkContext
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = (
@@ -136,3 +140,70 @@ def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
     if n_files and n_files * min_factor >= target:
         return df
     return df.repartition(target)
+
+
+# The one process-scoped cache: slot -> (version, value, owning Spark
+# application id or None). In memory only; it dies with the process.
+_MEMO: dict[tuple, tuple] = {}
+
+
+def _live_app() -> str | None:
+    sc = SparkContext._active_spark_context
+    return sc.applicationId if sc is not None else None
+
+
+def memo(slot: tuple, version, build):
+    """``build()``'s value for ``slot``, built once per ``version``.
+
+    A session reuses its derived structures across many queries (ANN
+    trainers and edge lists, fidelity corpora, broadcast profiles, file
+    listings); every such reuse goes through here under one rule.
+    ``slot`` names what is cached — the kind, the hyperparameters and the
+    source identity (table, sf_dir). ``version`` names what the value was
+    built from — file provenance, a directory signature, and the
+    ``applicationId`` for a value tied to a Spark context. A slot holds
+    one entry: an equal version is a hit; any other version drops the
+    entry and ``build`` runs again. The entry is recorded only after
+    ``build`` returns, so a failed build leaves nothing behind.
+
+    A superseded ``Broadcast`` built under the live application is
+    ``destroy()``ed. One built under another application is only
+    dropped: its blocks died with that SparkContext, and a new context
+    numbers broadcasts from 0 again, so ``destroy()`` would reach the
+    live broadcast that now has its id."""
+    entry = _MEMO.get(slot)
+    if entry is not None:
+        if entry[0] == version:
+            return entry[1]
+        del _MEMO[slot]
+        if isinstance(entry[1], Broadcast) and entry[2] == _live_app():
+            entry[1].destroy()
+    value = build()
+    _MEMO[slot] = (version, value, _live_app() if isinstance(value, Broadcast) else None)
+    return value
+
+
+def _session_base() -> str:
+    import atexit
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix="chlog-session-")
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    return base
+
+
+_TMP_SEQ = itertools.count()
+
+
+def session_tmpdir(prefix: str) -> str:
+    """A new empty directory under the process's one session base, which
+    is removed at exit. Per-run state (checkpoints, sinks) and session
+    caches (fidelity corpora, kNN edge lists) both live here, so a run
+    that fails before its own cleanup cannot leak a directory past the
+    process."""
+    import os
+
+    d = os.path.join(memo(("session_base",), None, _session_base), f"{prefix}{next(_TMP_SEQ)}")
+    os.mkdir(d)
+    return d

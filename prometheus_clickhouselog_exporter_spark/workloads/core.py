@@ -17,7 +17,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.tables import fan_out, read_parquet_nanos_safe  # noqa: F401 — fan_out re-exported; moved to sources.tables in r13 so operators can use it
+from ..sources.tables import fan_out, memo, read_parquet_nanos_safe  # noqa: F401 — fan_out re-exported; moved to sources.tables in r13 so operators can use it
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -43,12 +43,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_nanos_safe(spark, f"{sf_dir}/{name}.parquet")
 
 
-# Per-process memo for source_provenance: (abs table root) -> (cheap
-# dir signature, full listing). The full walk is O(part files); the
-# signature is two stats. See source_provenance for when it re-walks.
-_PROV_MEMO: dict[str, tuple[tuple, tuple]] = {}
-
-
 def _dir_sig(root: str) -> tuple:
     """Two-stat change signal for a Spark-written table dir: the root
     directory's own (mtime_ns, size) — any commit that adds, deletes, or
@@ -68,6 +62,22 @@ def _dir_sig(root: str) -> tuple:
     return tuple(sig)
 
 
+def _walk(sf_dir: str, root: str) -> tuple:
+    """(path relative to ``sf_dir``, mtime_ns, size) of every data file
+    under ``root``."""
+    import os
+
+    part: list[tuple[str, int, int]] = []
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            if f.endswith(".crc") or f.startswith("_") or f.startswith("."):
+                continue
+            p = os.path.join(dirpath, f)
+            st = os.stat(p)
+            part.append((os.path.relpath(p, sf_dir), st.st_mtime_ns, st.st_size))
+    return tuple(part)
+
+
 def source_provenance(sf_dir: str, *names: str) -> tuple:
     """Provenance fingerprint of the files behind ``{sf_dir}/{name}.parquet``:
     a sorted tuple of (relative path, mtime_ns, size) per data file.
@@ -83,8 +93,8 @@ def source_provenance(sf_dir: str, *names: str) -> tuple:
 
     Cost (ADVICE r12 #3): the walk is driver-side os.stat over every
     data file — fine for the fixtures here, real latency at millions of
-    part files — so the walk is memoized per table root behind a
-    two-stat signature (root dir + ``_SUCCESS``, ``_dir_sig``). Every
+    part files — so the walk is memoized per table root (``tables.memo``)
+    behind a two-stat signature (root dir + ``_SUCCESS``, ``_dir_sig``). Every
     Spark write path bumps that signature (commits replace entries under
     root and rewrite ``_SUCCESS``), so rewrites still miss; only a
     non-Spark edit of one file's bytes in place, touching neither, would
@@ -101,23 +111,7 @@ def source_provenance(sf_dir: str, *names: str) -> tuple:
     for name in names:
         root = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.isdir(root):
-            sig = _dir_sig(root)
-            memo = _PROV_MEMO.get(root)
-            if memo is not None and memo[0] == sig:
-                out.extend(memo[1])
-                continue
-            part: list[tuple[str, int, int]] = []
-            for dirpath, _dirs, files in os.walk(root):
-                for f in files:
-                    if f.endswith(".crc") or f.startswith("_") or f.startswith("."):
-                        continue
-                    p = os.path.join(dirpath, f)
-                    st = os.stat(p)
-                    part.append(
-                        (os.path.relpath(p, sf_dir), st.st_mtime_ns, st.st_size)
-                    )
-            _PROV_MEMO[root] = (sig, tuple(part))
-            out.extend(part)
+            out.extend(memo(("provenance", root), _dir_sig(root), lambda: _walk(sf_dir, root)))
         elif os.path.exists(root):
             st = os.stat(root)
             out.append((name + ".parquet", st.st_mtime_ns, st.st_size))
@@ -131,10 +125,10 @@ def source_provenance(sf_dir: str, *names: str) -> tuple:
 
 def corpus_key(sf_dir: str, name: str) -> tuple:
     """Session-cache key for a deterministic derivation of one source
-    table: (table, sf_dir, file-provenance). Passed as the explicit
-    ``train_cache_key`` of the ANN trainer cache and folded into the
-    streaming-fidelity corpus cache, so both invalidate on any in-place
-    rewrite of the source parquet."""
+    table: (table, sf_dir, file-provenance), the ``memo`` slot's source
+    identity followed by its version. Passed as the explicit
+    ``train_cache_key`` of the ANN trainers and kNN edge lists, so they
+    rebuild on any in-place rewrite of the source parquet."""
     return (name, sf_dir, source_provenance(sf_dir, name))
 
 

@@ -235,13 +235,10 @@ def streaming_moments_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver hash needs stable floats; mean/std derive from exact
     integer state identically on both sides.
     """
-    import tempfile
-
     from ..streaming.moments import moments_stream
+    from .llmdata11 import _cached_corpus, _fidelity_tmp, _materialize, _run_stream_to_memory
 
-    from .llmdata11 import _cached_corpus
-
-    tmp = tempfile.mkdtemp(prefix="moments-fidelity-")  # per-run ckpt only
+    tmp = _fidelity_tmp("moments-fidelity-")  # per-run ckpt/sink only
     ev = table(spark, sf_dir, "events").select("event_type", "value")
     corpus = _cached_corpus(
         ("moments", sf_dir),
@@ -252,19 +249,7 @@ def streaming_moments_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{corpus}/in"
         )
     )
-    name = f"moments_fid_{abs(hash(tmp)) % 100000}"
-    q = (
-        stream.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.sql(f"SELECT * FROM {name}")
+    out = _run_stream_to_memory(spark, stream, tmp)
     w = Window.partitionBy("event_type").orderBy(F.desc("n"))
     final = (
         out.withColumn("rk", F.row_number().over(w))
@@ -277,5 +262,6 @@ def streaming_moments_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    # materialize before the temp view goes away with the next query
-    return spark.createDataFrame(final.collect(), "event_type string, n bigint, mean double, std double")
+    return _materialize(
+        spark, tmp, final, "event_type string, n bigint, mean double, std double"
+    )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import memo
 from .core import fround, money, query, table
 
 
@@ -493,34 +494,22 @@ def growth_streak_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tests lower it to exercise the arm on the small fixtures.
 _ICWS_DOCS = 200_000
 
-# Dense-arm profile broadcast per (Spark application, corpus provenance)
-# (ADVICE r13 #2, r14 #1): every query BUILD used to collect and
-# re-broadcast the (n_docs × |V|) int64 profile matrix and never destroy
-# it — bench builds each query 3× (warm-up + 2 timed passes), leaking
-# ~n_docs·|V|·8 bytes per build for the session lifetime. One broadcast per
-# corpus; file provenance in the key catches in-place rewrites of the
-# source parquet, the application id a session restarted in this process.
-_DENSE_BC: dict[tuple, object] = {}
-
 
 def _dense_broadcast(spark: SparkSession, corpus: tuple, build):
-    """The ``_DENSE_BC`` broadcast of ``build()`` for ``corpus`` (a
-    ``core.corpus_key``) in this Spark application. Entries it supersedes
-    for the same table go: this application's (stale provenance) are
-    destroyed; another application's are only dropped. Their blocks died
-    with that SparkContext, and a new context numbers broadcasts from 0
-    again, so destroy() on one would delete the live broadcast that now
-    has its id."""
-    app = spark.sparkContext.applicationId
-    key = (app, *corpus)
-    bc = _DENSE_BC.get(key)
-    if bc is None:
-        for old in [k for k in _DENSE_BC if k[1:3] == key[1:3]]:
-            stale = _DENSE_BC.pop(old)
-            if old[0] == app:
-                stale.destroy()
-        bc = _DENSE_BC[key] = spark.sparkContext.broadcast(build())
-    return bc
+    """The broadcast of ``build()`` for ``corpus`` (a ``core.corpus_key``),
+    memoized per table and sf_dir and versioned by (Spark application,
+    provenance) (ADVICE r13 #2, r14 #1): every query BUILD used to collect
+    and re-broadcast the (n_docs × |V|) int64 profile matrix and never
+    destroy it — bench builds each query 3× (warm-up + 2 timed passes),
+    leaking ~n_docs·|V|·8 bytes per build for the session lifetime. A
+    superseded entry of this application is destroyed, another
+    application's only dropped (``tables.memo``)."""
+    name, sf_dir, provenance = corpus
+    sc = spark.sparkContext
+    return memo(
+        ("dense_bc", name, sf_dir), (sc.applicationId, provenance),
+        lambda: sc.broadcast(build()),
+    )
 
 
 @query(

@@ -172,7 +172,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs); degrees broadcast; the anti-join is a shuffle on
     the wedge endpoints."""
     nm, e0 = name_graph(spark, sf_dir)
-    e = e0.select("src", "dst").localCheckpoint(eager=False)
+    e = e0.select("src", "dst")
     deg = (
         e.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("d"))

@@ -31,6 +31,8 @@ import glob as _glob
 if not _glob.glob(os.path.join(_spark_jars, "spark-avro*")):
     collect_ignore.append("test_avro_roundtrip.py")
 
+from pyspark.broadcast import Broadcast
+
 from prometheus_clickhouselog_exporter_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -83,3 +85,14 @@ def write_events_parquet(path, rows):
         }
     )
     pq.write_table(t, str(path))
+
+
+class FakeBroadcast(Broadcast):
+    """A Broadcast that ``sources.tables.memo``'s release rules see, with
+    no JVM behind it: records whether it was destroyed."""
+
+    def __init__(self) -> None:
+        self.destroyed = False
+
+    def destroy(self, blocking: bool = False) -> None:
+        self.destroyed = True

@@ -21,6 +21,8 @@ from prometheus_clickhouselog_exporter_spark.workloads.core import (
     source_provenance,
 )
 
+from conftest import FakeBroadcast
+
 
 def _write_events(spark, sf_dir: str, n: int = 20, seed: int = 1) -> None:
     df = spark.range(n).select(
@@ -146,38 +148,37 @@ def test_documents_backed_corpus_keys_on_documents(spark, tmp_path):
     )
 
 
-class _FakeBroadcast:
-    destroyed = False
-
-    def destroy(self) -> None:
-        self.destroyed = True
-
-
-def test_dense_broadcast_memo_keys_on_the_application(spark):
+def test_dense_broadcast_memo_keys_on_the_application(spark, monkeypatch):
     """ADVICE r14 #1: the weighted-Jaccard dense-arm broadcast is memoized
     per Spark application. An entry left by another application (a session
     stopped and restarted in this process) is never reused; it is dropped
     without destroy(), which would reach the live context. This
     application's entry for a stale provenance is destroyed."""
+    from prometheus_clickhouselog_exporter_spark.sources import tables
     from prometheus_clickhouselog_exporter_spark.workloads import relational10 as r10
 
     app = spark.sparkContext.applicationId
     corpus = ("documents", "/sf", (("documents.parquet", 2, 10),))
-    other_app, stale = _FakeBroadcast(), _FakeBroadcast()
-    saved = dict(r10._DENSE_BC)
-    r10._DENSE_BC.clear()
+    slot, other_slot = ("dense_bc", "documents", "/sf"), ("dense_bc", "documents", "/other")
+    other_app, stale = FakeBroadcast(), FakeBroadcast()
+    saved = dict(tables._MEMO)
+    for s in [s for s in tables._MEMO if s[0] == "dense_bc"]:
+        del tables._MEMO[s]
     bc = None
     try:
-        r10._DENSE_BC[("local-gone", *corpus)] = other_app
-        r10._DENSE_BC[(app, "documents", "/sf", (("documents.parquet", 1, 10),))] = stale
-        r10._DENSE_BC[(app, "documents", "/other", ())] = kept = _FakeBroadcast()
+        with monkeypatch.context() as m:
+            m.setattr(tables, "_live_app", lambda: "local-gone")
+            tables.memo(slot, ("local-gone", corpus[2]), lambda: other_app)
+        tables.memo(slot, (app, (("documents.parquet", 1, 10),)), lambda: stale)
+        kept = tables.memo(other_slot, (app, ()), FakeBroadcast)
         bc = r10._dense_broadcast(spark, corpus, lambda: (1, 2))
         assert bc is not other_app and bc.value == (1, 2)
         assert stale.destroyed and not other_app.destroyed and not kept.destroyed
-        assert set(r10._DENSE_BC) == {(app, *corpus), (app, "documents", "/other", ())}
+        dense = {s: e[0] for s, e in tables._MEMO.items() if s[0] == "dense_bc"}
+        assert dense == {slot: (app, corpus[2]), other_slot: (app, ())}
         assert r10._dense_broadcast(spark, corpus, lambda: 1 / 0) is bc  # hit: no rebuild
     finally:
         if bc is not None:
             bc.destroy()
-        r10._DENSE_BC.clear()
-        r10._DENSE_BC.update(saved)
+        tables._MEMO.clear()
+        tables._MEMO.update(saved)
