@@ -13,7 +13,7 @@ Layout
                     metric aggregates, relational library, dedup, similarity,
                     text stats, multimodal plumbing
 - ``streaming``   : Structured Streaming pipeline (stateful sessionization
-                    via applyInPandasWithState, foreachBatch sinks)
+                    via ``streaming.keyed_fold``, foreachBatch sinks)
 
 Everything is DataFrame-first: operators return lazily-evaluated DataFrames
 and never collect on the driver.

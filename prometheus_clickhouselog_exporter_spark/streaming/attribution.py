@@ -1,7 +1,7 @@
 """Streaming twin of last-touch attribution
 (workloads/pipeline_ops4.attribution_last_touch).
 
-Per-user carry-forward state on ``applyInPandasWithState``: every
+Per-user carry-forward state on ``keyed_fold``: every
 click/view updates the user's last-touch (channel, ts); every purchase
 emits ONE attribution row crediting the state as it stood strictly
 before the purchase — or 'direct' when nothing precedes it. For
@@ -23,12 +23,11 @@ to the reference's unbounded map, main.go:110-129).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold, ts_micros
 
 ATTRIBUTION_OUTPUT_SCHEMA = (
     "user_id bigint, purchase_ts timestamp, value double, channel string"
@@ -68,52 +67,26 @@ def attribution_stream(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
     """events (user_id, ts, event_type, event_id, value) → one row per
     purchase with its attributed channel, incrementally."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        user_id = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        ts_us = ev["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
+    def fold(key, ev, prev):
         # sort key must be (ts, event_id) — the batch twin's window order —
         # never the tuple's natural order, which would compare event_type
         # strings at equal timestamps and diverge from the batch rollup
         rows = sorted(
             zip(
-                ts_us.tolist(),
+                ts_micros(ev["ts"]).tolist(),
                 ev["event_type"].tolist(),
                 ev["event_id"].tolist(),
                 ev["value"].tolist(),
             ),
             key=lambda r: (r[0], r[2]),
         )
-        prev = tuple(state.get) if state.exists else None
         out, new_state = _fold_attribution(rows, prev)
-        state.update(new_state)
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(out),
-                    "purchase_ts": [pd.Timestamp(o["ts_us"], unit="us") for o in out],
-                    "value": [o["value"] for o in out],
-                    "channel": [o["channel"] for o in out],
-                }
-            )
+        return [
+            (key[0], pd.Timestamp(o["ts_us"], unit="us"), o["value"], o["channel"])
+            for o in out
+        ], new_state
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("user_id", "ts", "event_type", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            func, ATTRIBUTION_OUTPUT_SCHEMA, _STATE_SCHEMA, "append", timeout_conf
-        )
+    return keyed_fold(
+        events.select("user_id", "ts", "event_type", "event_id", "value"), "user_id", fold,
+        ATTRIBUTION_OUTPUT_SCHEMA, _STATE_SCHEMA, "append", timeout_ms,
     )

@@ -12,12 +12,11 @@ through O(1) state per user.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold, ts_micros
 
 GUARD_OUTPUT_SCHEMA = (
     "user_id bigint, n bigint, n_purchases bigint, n_guarded_conversions bigint"
@@ -30,18 +29,19 @@ _WINDOW_US = 30 * 60 * 1_000_000
 
 
 def _ts_event_rows(pdf: pd.DataFrame) -> list[tuple[int, str]]:
-    """(ts_us, event_type) rows from a micro-batch slice, sorted.
-
-    Shared by both wrappers so their ts handling cannot diverge: datetime64
-    columns convert ns→µs; integer columns are trusted to already be µs
-    (a caller supplying int-µs must NOT be divided by 1000)."""
+    """(ts_us, event_type) rows from a micro-batch slice in (ts,
+    event_id) order — shared by both folds so their ordering cannot
+    diverge."""
     pdf = pdf.sort_values(["ts", "event_id"])
-    ts = (
-        (pdf["ts"].astype("int64") // 1000)
-        if pdf["ts"].dtype.kind == "M"
-        else pdf["ts"]
+    return list(zip(ts_micros(pdf["ts"]).tolist(), pdf["event_type"].tolist()))
+
+
+def _user_stream(events: DataFrame, fold, out_schema: str, state_schema: str) -> DataFrame:
+    return keyed_fold(
+        events.select("user_id", "ts", "event_id", "event_type"), "user_id",
+        lambda key, pdf, prev: fold(key, _ts_event_rows(pdf), prev),
+        out_schema, state_schema, "update",
     )
-    return list(zip(ts.tolist(), pdf["event_type"].tolist()))
 
 
 def fold_guard(rows: list[tuple[int, str]], state: tuple | None) -> tuple:
@@ -73,39 +73,11 @@ def guard_stream(events: DataFrame) -> DataFrame:
     """events(user_id, ts, event_id, event_type) stream → per-user
     running (n, n_purchases, n_guarded_conversions) in update mode."""
 
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        parts = [p for p in pdfs if len(p)]
-        if not parts:
-            return
-        rows = _ts_event_rows(pd.concat(parts))
-        prev = tuple(state.get) if state.exists else None
-        n, n_p, n_g, lc, le = fold_guard(rows, prev)
-        state.update((n, n_p, n_g, lc, le))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n": [n],
-                "n_purchases": [n_p],
-                "n_guarded_conversions": [n_g],
-            }
-        )
+    def fold(key, rows, prev):
+        n, n_p, n_g, _lc, _le = folded = fold_guard(rows, prev)
+        return [(key[0], n, n_p, n_g)], folded
 
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            func,
-            GUARD_OUTPUT_SCHEMA,
-            _GUARD_STATE,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _user_stream(events, fold, GUARD_OUTPUT_SCHEMA, _GUARD_STATE)
 
 
 FUNNEL_OUTPUT_SCHEMA = "user_id bigint, n bigint, funnel_level bigint"
@@ -159,31 +131,8 @@ def window_funnel_stream(events: DataFrame) -> DataFrame:
     """events(user_id, ts, event_id, event_type) stream → per-user
     running (n, funnel_level) in update mode (windowFunnel(3600))."""
 
-    def func(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        parts = [p for p in pdfs if len(p)]
-        if not parts:
-            return
-        rows = _ts_event_rows(pd.concat(parts))
-        prev = tuple(state.get) if state.exists else None
-        n, best, ov, ol = fold_funnel(rows, prev)
-        state.update((n, best, ov, ol))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n": [n], "funnel_level": [best]}
-        )
+    def fold(key, rows, prev):
+        n, best, _ov, _ol = folded = fold_funnel(rows, prev)
+        return [(key[0], n, best)], folded
 
-    return (
-        events.select("user_id", "ts", "event_id", "event_type")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            func,
-            FUNNEL_OUTPUT_SCHEMA,
-            _FUNNEL_STATE,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _user_stream(events, fold, FUNNEL_OUTPUT_SCHEMA, _FUNNEL_STATE)

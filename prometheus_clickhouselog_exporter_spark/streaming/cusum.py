@@ -38,12 +38,11 @@ main.go:110-129 / query.go:180-230, applied to a rate series.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold, ts_micros
 
 CUSUM_OUTPUT_SCHEMA = (
     "event_type string, day date, n bigint, cusum bigint, alarm boolean"
@@ -86,45 +85,21 @@ def cusum_stream(
     """events (ts, event_type, event_id) → one append row per CLOSED
     (event_type, day) with the running CUSUM statistic and alarm flag."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        ts_us = ev["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-        days = sorted((ts_us // _US_PER_DAY).tolist())
-        prev = tuple(state.get) if state.exists else None
+    def fold(key, ev, prev):
+        days = sorted((ts_micros(ev["ts"]) // _US_PER_DAY).tolist())
         out, new_state = _fold_cusum(days, prev, kref, threshold)
-        state.update(new_state)
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "event_type": [event_type] * len(out),
-                    "day": [
-                        pd.Timestamp(o["day"] * _US_PER_DAY, unit="us").date()
-                        for o in out
-                    ],
-                    "n": [o["n"] for o in out],
-                    "cusum": [o["cusum"] for o in out],
-                    "alarm": [o["alarm"] for o in out],
-                }
+        return [
+            (
+                key[0],
+                pd.Timestamp(o["day"] * _US_PER_DAY, unit="us").date(),
+                o["n"],
+                o["cusum"],
+                o["alarm"],
             )
+            for o in out
+        ], new_state
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("ts", "event_type", "event_id")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func, CUSUM_OUTPUT_SCHEMA, _STATE_SCHEMA, "append", timeout_conf
-        )
+    return keyed_fold(
+        events.select("ts", "event_type", "event_id"), "event_type", fold,
+        CUSUM_OUTPUT_SCHEMA, _STATE_SCHEMA, "append", timeout_ms,
     )

@@ -1,7 +1,7 @@
 """Streaming twin of the ordered view→click→purchase funnel
 (workloads/llmdata2.funnel_view_click_purchase — ROADMAP breadth item).
 
-Per-user stage machine on ``applyInPandasWithState``: the earliest view
+Per-user stage machine on ``keyed_fold``: the earliest view
 anchors the funnel, the earliest click after it arms the purchase stage,
 and the first purchase after that click emits ONE completion row
 (user_id, stage timestamps, hours_to_convert) and retires the user's
@@ -18,13 +18,13 @@ leaking map (main.go:110-129 analog).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold, ts_micros
 
 FUNNEL_OUTPUT_SCHEMA = (
     "user_id bigint, view_ts timestamp, click_ts timestamp, "
@@ -67,40 +67,22 @@ def funnel_stream(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
     """events (user_id, ts, event_type) → one completion row per user who
     finishes view → click-after-view → purchase-after-click."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        user_id = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [p for p in pdfs if len(p)]
-        if frames:
-            ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-            ts_us = ev["ts"].to_numpy(dtype="datetime64[us]").astype("int64")
-            rows = sorted(zip(ts_us.tolist(), ev["event_type"].tolist()))
-            prev = tuple(state.get) if state.exists else None
-            out, new_state = _fold_funnel(rows, prev)
-            if new_state[2] and out:  # completed — no further state needed
-                state.remove()
-            else:
-                state.update(new_state)
-                if timeout_ms > 0:
-                    state.setTimeoutDuration(timeout_ms)
-            for o in out:
-                yield pd.DataFrame(
-                    [
-                        {
-                            "user_id": user_id,
-                            "view_ts": pd.Timestamp(o["v_us"], unit="us"),
-                            "click_ts": pd.Timestamp(o["c_us"], unit="us"),
-                            "purchase_ts": pd.Timestamp(o["p_us"], unit="us"),
-                            "hours_to_convert": o["hours"],
-                        }
-                    ]
-                )
+    def fold(key, ev, prev):
+        rows = sorted(zip(ts_micros(ev["ts"]).tolist(), ev["event_type"].tolist()))
+        out, new_state = _fold_funnel(rows, prev)
+        done = new_state[2] and bool(out)  # completed — no further state needed
+        return [
+            (
+                key[0],
+                pd.Timestamp(o["v_us"], unit="us"),
+                pd.Timestamp(o["c_us"], unit="us"),
+                pd.Timestamp(o["p_us"], unit="us"),
+                o["hours"],
+            )
+            for o in out
+        ], None if done else new_state
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout if timeout_ms > 0 else GroupStateTimeout.NoTimeout
-    )
-    return events.select("user_id", "ts", "event_type").groupBy("user_id").applyInPandasWithState(
-        func, FUNNEL_OUTPUT_SCHEMA, _FUNNEL_STATE_SCHEMA, "append", timeout_conf
+    return keyed_fold(
+        events.select("user_id", "ts", "event_type"), "user_id", fold,
+        FUNNEL_OUTPUT_SCHEMA, _FUNNEL_STATE_SCHEMA, "append", timeout_ms,
     )

@@ -1,6 +1,6 @@
 """Streaming calendar gap-fill — the timer-family stateful operator the
 reference's eviction loop (main.go:125-129) gestures at, rendered as
-applyInPandasWithState in APPEND mode.
+``keyed_fold`` in APPEND mode.
 
 A per-key daily series arrives as (key, day, n, total) observations in
 day order (the log-tailing regime: files land chronologically). The
@@ -42,12 +42,11 @@ fill from a corrupt far-future day.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold
 
 GAPFILL_OUTPUT_SCHEMA = (
     "event_type string, day date, n bigint, total double, is_filled boolean"
@@ -99,51 +98,22 @@ def gapfill_stream(daily: DataFrame, timeout_ms: int = 0) -> DataFrame:
     """daily (event_type, day, n, total) → append-mode regularized
     series (event_type, day, n, total, is_filled)."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:
-            # Series closes: evict so the next observation restarts a
-            # fresh segment instead of filling across the dark period.
-            state.remove()
-            return
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    def fold(key, ev, prev):
+        # a timed-out key is evicted by keyed_fold, so the next
+        # observation restarts a fresh segment instead of filling across
+        # the dark period
         ev = ev.sort_values("day", kind="mergesort")
         rows = [
             ((pd.Timestamp(d) - pd.Timestamp(1970, 1, 1)).days, int(n), float(t))
             for d, n, t in zip(ev["day"], ev["n"], ev["total"])
         ]
-        prev = tuple(state.get) if state.exists else None
         out, new_state = fold_gapfill(rows, prev)
-        state.update(new_state)
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if not out:
-            return
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type] * len(out),
-                "day": [
-                    (pd.Timestamp(1970, 1, 1) + pd.Timedelta(days=d)).date()
-                    for d, _, _, _ in out
-                ],
-                "n": [n for _, n, _, _ in out],
-                "total": [t for _, _, t, _ in out],
-                "is_filled": [f for _, _, _, f in out],
-            }
-        )
+        return [
+            (key[0], (pd.Timestamp(1970, 1, 1) + pd.Timedelta(days=d)).date(), n, t, f)
+            for d, n, t, f in out
+        ], new_state
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        daily.select("event_type", "day", "n", "total")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func, GAPFILL_OUTPUT_SCHEMA, _GAPFILL_STATE, "append", timeout_conf
-        )
+    return keyed_fold(
+        daily.select("event_type", "day", "n", "total"), "event_type", fold,
+        GAPFILL_OUTPUT_SCHEMA, _GAPFILL_STATE, "append", timeout_ms,
     )

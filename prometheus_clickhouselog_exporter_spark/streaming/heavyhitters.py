@@ -1,5 +1,5 @@
 """Streaming heavy hitters: a Misra–Gries summary per group as
-`applyInPandasWithState` state.
+`keyed_fold` state.
 
 The batch twin (`heavy_hitter_tokens`) counts exactly in two phases; on
 an unbounded stream exact counting needs O(distinct keys) state. The
@@ -20,12 +20,9 @@ batch (update mode) so the sink always holds the latest view.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold
 
 HH_OUTPUT_SCHEMA = (
     "event_type string, user_id bigint, est_count bigint, n_seen bigint"
@@ -57,43 +54,25 @@ def heavy_hitters_stream(events: DataFrame, k: int = 8) -> DataFrame:
     current Misra–Gries summary of heavy-hitter user_ids, re-emitted
     every batch the group receives data (update mode)."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    def fold(key, ev, state):
         # deterministic fold order within the batch: (ts, event_id) —
         # MG's surviving low-count entries are order-dependent even
         # though its heavy-hitter guarantee is not
         ev = ev.sort_values(["ts", "event_id"])
         items = ev["user_id"].tolist()
-        if state.exists:
-            keys, counts, n_seen = state.get
+        if state is not None:
+            keys, counts, n_seen = state
             summary = dict(zip(keys, counts))
         else:
             summary, n_seen = {}, 0
         mg_fold(summary, items, k)
         n_seen += len(items)
         ks = list(summary.keys())
-        state.update((ks, [summary[x] for x in ks], n_seen))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type] * len(ks),
-                "user_id": ks,
-                "est_count": [summary[x] for x in ks],
-                "n_seen": [n_seen] * len(ks),
-            }
+        return [(key[0], x, summary[x], n_seen) for x in ks], (
+            ks, [summary[x] for x in ks], n_seen
         )
 
-    return (
-        events.select("event_type", "ts", "event_id", "user_id")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func,
-            HH_OUTPUT_SCHEMA,
-            _STATE_SCHEMA,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.select("event_type", "ts", "event_id", "user_id"), "event_type", fold,
+        HH_OUTPUT_SCHEMA, _STATE_SCHEMA, "update",
     )

@@ -6,7 +6,7 @@ distributed streaming equivalents Spark provides).
 ST3 correlation (initial line ⋈ its MemoryTracker close, query.go:207-235):
 both sides are unbounded, so Spark buffers each in watermarked state and the
 time-bound condition lets it expire rows once no future match is possible.
-Contrast with ``streaming/session_state.py`` (applyInPandasWithState),
+Contrast with ``streaming/session_state.py`` (``keyed_fold``),
 which implements the full ST1-ST5 fold; the join form is what you reach for
 when only two event kinds matter and you want the engine to manage state
 entirely declaratively.

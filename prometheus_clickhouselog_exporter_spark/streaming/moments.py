@@ -4,7 +4,7 @@ with THREE integers of mergeable state.
 The batch moment statistics here (skewness, ANOVA, Cohen's d, the
 interarrival CV) all advertise the same property: quantized moment
 sums merge by ADDITION, so they are streaming-ready. This module
-cashes that in: an applyInPandasWithState operator whose per-key state
+cashes that in: a ``keyed_fold`` operator whose per-key state
 is (n, Σq, Σq²) over quantized values (floor(value·1e4) BIGINTs at the
 default ``_SCALE`` — the
 workloads/core.py fold rule), updated per batch and emitted as the
@@ -24,12 +24,9 @@ magnitudes (the floor-clamp rule, SCALE.md).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold
 
 MOMENTS_OUTPUT_SCHEMA = (
     "event_type string, n bigint, mean double, std double, cv double"
@@ -68,45 +65,18 @@ def moments_stream(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
     """events (event_type, value) → running per-type mean/std/CV after
     each batch (update mode)."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        prev = tuple(state.get) if state.exists else None
+    def fold(key, ev, prev):
         n, s, ss = _fold_moments(ev["value"].tolist(), prev)
-        state.update((n, s, ss))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
         mean = (s / _SCALE) / n
         var = (ss / (_SCALE * _SCALE)) / n - mean * mean
         std = var**0.5 if var > 0 else 0.0
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n": [n],
-                "mean": [mean],
-                "std": [std],
-                # SQL NULL (not NaN) for the 0/0 case: downstream
-                # recomputation oracles and parquet round-trips compare
-                # NULL = NULL but NaN != NaN across engines.
-                "cv": [std / mean if mean != 0 else None],
-            }
-        )
+        # SQL NULL (not NaN) for the 0/0 case: downstream recomputation
+        # oracles and parquet round-trips compare NULL = NULL but NaN != NaN
+        # across engines.
+        cv = std / mean if mean != 0 else None
+        return [(key[0], n, mean, std, cv)], (n, s, ss)
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("event_type", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func, MOMENTS_OUTPUT_SCHEMA, _STATE_SCHEMA, "update", timeout_conf
-        )
+    return keyed_fold(
+        events.select("event_type", "value"), "event_type", fold,
+        MOMENTS_OUTPUT_SCHEMA, _STATE_SCHEMA, "update", timeout_ms,
     )

@@ -1,5 +1,5 @@
-"""Streaming weighted reservoir (Efraimidis–Spirakis A-ES) as an
-applyInPandasWithState operator.
+"""Streaming weighted reservoir (Efraimidis–Spirakis A-ES) as a
+``keyed_fold`` operator.
 
 The A-ES sample is a pure top-k fold over per-row keys: key_i =
 u_i^(1/w_i) computed ONCE per row, then the k largest keys win. Because
@@ -24,12 +24,9 @@ sample over an unbounded stream with bounded memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold
 
 RESERVOIR_OUTPUT_SCHEMA = (
     "event_type string, n_seen bigint, rk bigint, event_id bigint, "
@@ -45,17 +42,9 @@ def reservoir_stream(keyed: DataFrame, k: int = 20) -> DataFrame:
     the stratum's current top-k reservoir rows (update mode), tagged
     with n_seen so the harness can select the final emission per key."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        batch = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        if state.exists:
-            ids, keys, ws, n_seen = state.get
+    def fold(key, batch, state):
+        if state is not None:
+            ids, keys, ws, n_seen = state
             ids, keys, ws = list(ids), list(keys), list(ws)
         else:
             ids, keys, ws, n_seen = [], [], [], 0
@@ -68,26 +57,12 @@ def reservoir_stream(keyed: DataFrame, k: int = 20) -> DataFrame:
         ids = [ids[i] for i in order]
         keys = [keys[i] for i in order]
         ws = [ws[i] for i in order]
-        state.update((ids, keys, ws, n_seen))
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type] * len(ids),
-                "n_seen": [n_seen] * len(ids),
-                "rk": list(range(1, len(ids) + 1)),
-                "event_id": ids,
-                "w": ws,
-                "key_q": keys,
-            }
-        )
+        return [
+            (key[0], n_seen, rk, i, w, q)
+            for rk, (i, w, q) in enumerate(zip(ids, ws, keys), start=1)
+        ], (ids, keys, ws, n_seen)
 
-    return (
-        keyed.select("event_type", "event_id", "w", "key_q")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func,
-            RESERVOIR_OUTPUT_SCHEMA,
-            _RESERVOIR_STATE,
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        keyed.select("event_type", "event_id", "w", "key_q"), "event_type", fold,
+        RESERVOIR_OUTPUT_SCHEMA, _RESERVOIR_STATE, "update",
     )

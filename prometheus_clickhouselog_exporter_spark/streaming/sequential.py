@@ -1,5 +1,5 @@
 """Streaming ORDER-SENSITIVE sequential monitors — runs test and lag-1
-autocorrelation as applyInPandasWithState operators.
+autocorrelation as ``keyed_fold`` operators.
 
 The moments monitor (streaming/moments.py) proved the additive-state
 family streams trivially: state merges by addition, order-free. These
@@ -30,12 +30,11 @@ STATE schema is budget-bound, never the emission arithmetic.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .keyed_fold import keyed_fold
 
 RUNS_OUTPUT_SCHEMA = (
     "event_type string, n bigint, n_above bigint, n_below bigint, "
@@ -53,13 +52,19 @@ _SCALE = 10_000
 _SUM_CAP = 1 << 62
 
 
-def _ordered_values(pdfs: Iterator[pd.DataFrame]) -> list:
-    frames = [p for p in pdfs if len(p)]
-    if not frames:
-        return []
-    ev = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-    ev = ev.sort_values(["ts", "event_id"], kind="mergesort")
-    return ev["value"].tolist()
+def _ordered_values(ev: pd.DataFrame) -> list:
+    return ev.sort_values(["ts", "event_id"], kind="mergesort")["value"].tolist()
+
+
+def _sequential_stream(
+    events: DataFrame, fold, out_schema: str, state_schema: str, timeout_ms: int
+) -> DataFrame:
+    """The three monitors' shared shape: non-null values folded per
+    event_type in (ts, event_id) order, re-emitted in update mode."""
+    return keyed_fold(
+        events.select("event_type", "ts", "event_id", "value").filter("value IS NOT NULL"),
+        "event_type", fold, out_schema, state_schema, "update", timeout_ms,
+    )
 
 
 def _fround(x: float, digits: int = 6) -> float:
@@ -96,47 +101,15 @@ def runs_stream(
     Wald-Wolfowitz runs statistics after each batch (update mode):
     observed run count vs the i.i.d. expectation 1 + 2·n₊·n₋/n."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        values = _ordered_values(pdfs)
-        if not values:
-            return
-        prev = tuple(state.get) if state.exists else None
-        n, na, runs, last = fold_runs(values, prev, threshold)
-        state.update((n, na, runs, last))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
+    def fold(key, ev, prev):
+        n, na, runs, _last = folded = fold_runs(_ordered_values(ev), prev, threshold)
         if n == 0:
-            return
+            return [], folded
         nb = n - na
         expected = 1.0 + (2.0 * na * nb) / n
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n": [n],
-                "n_above": [na],
-                "n_below": [nb],
-                "n_runs": [runs],
-                "expected_runs": [_fround(expected)],
-            }
-        )
+        return [(key[0], n, na, nb, runs, _fround(expected))], folded
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("event_type", "ts", "event_id", "value")
-        .filter("value IS NOT NULL")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func, RUNS_OUTPUT_SCHEMA, _RUNS_STATE, "update", timeout_conf
-        )
-    )
+    return _sequential_stream(events, fold, RUNS_OUTPUT_SCHEMA, _RUNS_STATE, timeout_ms)
 
 
 DELTA_OUTPUT_SCHEMA = (
@@ -177,41 +150,11 @@ def delta_sum_stream(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
     positive-delta accumulator, order-sensitive like runs/acf1 — one
     boundary cent of extra state stitches batches together."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        values = _ordered_values(pdfs)
-        if not values:
-            return
-        prev = tuple(state.get) if state.exists else None
-        n, ds, drops, last_q, has_last = fold_delta_sum(values, prev)
-        state.update((n, ds, drops, last_q, has_last))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n": [n],
-                "delta_sum_cents": [ds],
-                "n_drops": [drops],
-            }
-        )
+    def fold(key, ev, prev):
+        n, ds, drops, _lq, _hl = folded = fold_delta_sum(_ordered_values(ev), prev)
+        return [(key[0], n, ds, drops)], folded
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("event_type", "ts", "event_id", "value")
-        .filter("value IS NOT NULL")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func, DELTA_OUTPUT_SCHEMA, _DELTA_STATE, "update", timeout_conf
-        )
-    )
+    return _sequential_stream(events, fold, DELTA_OUTPUT_SCHEMA, _DELTA_STATE, timeout_ms)
 
 
 def fold_acf1(values: list[float], state: tuple | None) -> tuple:
@@ -249,22 +192,10 @@ def acf1_stream(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
     mode) — the live seasonality/trend probe twinning the batch
     correlogram (timeseries_acf_by_type)."""
 
-    def func(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        event_type = key[0]
-        if state.hasTimedOut:
-            state.remove()
-            return
-        values = _ordered_values(pdfs)
-        if not values:
-            return
-        prev = tuple(state.get) if state.exists else None
-        folded = fold_acf1(values, prev)
-        state.update(folded)
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        n, m, sxy, sh, st, shh, stt, _lq, _hl = folded
+    def fold(key, ev, prev):
+        n, m, sxy, sh, st, shh, stt, _lq, _hl = folded = fold_acf1(_ordered_values(ev), prev)
         if m < 2:
-            return
+            return [], folded
         # exact-int cross terms (Python arbitrary precision), each
         # converted to double ONCE, then the identical op sequence the
         # SQL oracle runs: num / sqrt(da·db) — so the only inexactness
@@ -276,25 +207,6 @@ def acf1_stream(events: DataFrame, timeout_ms: int = 0) -> DataFrame:
             r1 = None
         else:
             r1 = _fround(num / (da * db) ** 0.5)
-        yield pd.DataFrame(
-            {
-                "event_type": [event_type],
-                "n": [n],
-                "n_pairs": [m],
-                "r1": [r1],
-            }
-        )
+        return [(key[0], n, m, r1)], folded
 
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("event_type", "ts", "event_id", "value")
-        .filter("value IS NOT NULL")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            func, ACF1_OUTPUT_SCHEMA, _ACF1_STATE, "update", timeout_conf
-        )
-    )
+    return _sequential_stream(events, fold, ACF1_OUTPUT_SCHEMA, _ACF1_STATE, timeout_ms)

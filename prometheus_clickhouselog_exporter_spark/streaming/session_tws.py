@@ -16,7 +16,7 @@ adds over ``applyInPandasWithState``:
 - **State TTL** (``ttlDurationMs``): a declarative state bound in
   addition to the timer-based evict.
 
-100 TB: identical shuffle/state shape to the applyInPandasWithState path
+100 TB: identical shuffle/state shape to the ``keyed_fold`` path
 (hash-partition by query id, RocksDB state store); the per-group Python
 harness overhead is also comparable (~0.3 ms/group measured) — choose by
 API capability, not throughput.
@@ -26,7 +26,7 @@ requires ``google.protobuf``, which this build container does not ship
 (no installs allowed), so tests/test_session_tws.py SKIPS there and this
 module is exercised only on standard Spark distributions (protobuf is a
 stock pyspark dependency). The state machine itself is the SAME
-``fold_events`` the fully-tested applyInPandasWithState path runs — only
+``fold_events`` the fully-tested ``keyed_fold`` path runs — only
 the harness glue differs.
 """
 
