@@ -11,13 +11,15 @@ here once: ``min_label_rounds`` is the min-label kernel the fixed-round
 workloads call (with ``weight=``, also the BFS and Bellman–Ford
 relaxation), ``large_star``/``small_star`` the star step, and
 ``connected_components``/``connected_components_star`` iterate them to
-the ``_checksum`` fixpoint probe.
+a fixpoint (``rounds.fixpoint``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .rounds import Step, fixpoint, rounds as run_rounds
 
 # Mersenne prime 2^31-1: the classic universal-hash modulus. Keeping
 # arithmetic under 2^31 keeps a*h+b within long range even with ANSI
@@ -321,18 +323,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _checksum(df: DataFrame) -> tuple:
-    """Order-free fingerprint of a frame, for any column types: (row
-    count, bit_xor of every row's xxhash64). One action. Two equal
-    fingerprints on consecutive rounds is the fixpoint probe of both
-    connected-components loops."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*df.columns)).alias("h"),  # order-free, no ANSI overflow
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
 def min_label_rounds(
     edges: DataFrame, labels: DataFrame, rounds: int, weight: Column | None = None
 ) -> DataFrame:
@@ -353,11 +343,15 @@ def min_label_rounds(
     too.
 
     Scale: each round is one shuffle join (edges ⋈ labels on src) plus a
-    min aggregate on dst with map-side combining; the per-round lazy
-    ``localCheckpoint`` cuts the lineage so round k's plan does not
-    re-derive rounds 1..k-1 (the classic Spark CC failure mode)."""
+    min aggregate on dst with map-side combining; ``rounds`` cuts each
+    round's lineage."""
+    return run_rounds(labels, _min_label_step(edges, weight), rounds)[-1]
+
+
+def _min_label_step(edges: DataFrame, weight: Column | None) -> Step:
     relaxed = F.col("sl") if weight is None else F.col("sl") + weight
-    for _ in range(rounds):
+
+    def step(labels: DataFrame) -> DataFrame:
         best = (
             edges.join(
                 labels.select(F.col("id").alias("src"), F.col("label").alias("sl")),
@@ -366,17 +360,14 @@ def min_label_rounds(
             .groupBy("dst")
             .agg(F.min(relaxed).alias("nl"))
         )
-        labels = (
-            labels.join(best, labels["id"] == best["dst"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(best, labels["id"] == best["dst"], "left").select(
+            "id",
+            F.least(F.col("label"), F.coalesce(F.col("nl"), F.col("label"))).alias(
+                "label"
+            ),
         )
-    return labels
+
+    return step
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -389,8 +380,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     retention, and min-id-per-component is the canonical pick.
 
     Algorithm: hash-to-min label propagation, one ``min_label_rounds``
-    round per iteration until a round leaves the ``_checksum`` probe
-    unchanged (one action per round); converges in O(graph diameter)
+    round per iteration until a round leaves the ``rounds.fixpoint``
+    probe unchanged (one action per round); converges in O(graph diameter)
     rounds. Dedup graphs are near-cliques of bounded size, so the diameter
     is tiny (2-3 rounds); for adversarial long-chain graphs
     ``connected_components_star`` drops to O(log²n) rounds. Raises
@@ -406,15 +397,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .localCheckpoint()
     )
     labels = sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    prev = None
-    for _ in range(max_iter):
-        labels = min_label_rounds(sym, labels, 1)
-        cur = _checksum(labels)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint after max_iter={max_iter} rounds")
+    labels = fixpoint(labels, _min_label_step(sym, None), max_iter, "connected_components")
     return labels.withColumnRenamed("label", "comp")
 
 
@@ -457,6 +440,12 @@ def small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def star_round(e: DataFrame) -> DataFrame:
+    """One large-star then small-star pass: the round both star loops
+    iterate."""
+    return small_star(large_star(e))
+
+
 def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components by alternating ``large_star``/``small_star``
     rounds (Kiveris et al., "Connected Components in MapReduce and
@@ -467,7 +456,7 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame
 
     Each round is two groupBy-min + join passes over the current edge
     list, lineage truncated per round. Converged when a round leaves the
-    edge list's ``_checksum`` unchanged (star forest: every non-root
+    edge list's fingerprint unchanged (star forest: every non-root
     points at its component min); output matches ``connected_components``
     exactly. Raises ``RuntimeError`` when ``max_iter`` rounds pass without
     a fixpoint.
@@ -478,17 +467,7 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame
         .distinct()
         .localCheckpoint()
     )
-    prev = None
-    for _ in range(max_iter):
-        edges = small_star(large_star(edges)).localCheckpoint(eager=False)
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint after max_iter={max_iter} rounds"
-        )
+    edges = fixpoint(edges, star_round, max_iter, "connected_components_star")
 
     # fixed point is a star: every non-root points at its component min
     nodes = _sym(edges).select("u").distinct()

@@ -64,7 +64,15 @@ class _Hist:
         self.buckets = [float(b) for b in buckets]
         self.counts = defaultdict(float)  # le → cumulative count
         self.total = 0.0
-        self.sum = 0.0
+        self.exact_sum = Decimal(0)  # exact, so independent of merge order
+
+    @property
+    def sum(self) -> float:
+        return float(self.exact_sum)
+
+    @sum.setter
+    def sum(self, v: float) -> None:
+        self.exact_sum = Decimal(v)
 
 
 class PrometheusSnapshotSink:
@@ -137,12 +145,17 @@ class PrometheusSnapshotSink:
     def _aggregate(df: DataFrame) -> list:
         """One Spark action: a groupBy over the four label columns carries
         ``count(1)`` plus, per histogram, cumulative bucket sums,
-        ``count(v)`` and ``sum(v)``."""
+        ``count(v)`` and ``sum(v)``. The sum is a ``decimal(38,6)``: exact
+        for the µs-resolution ``elapsed`` and the integer stats values, so
+        it does not depend on how the rows are partitioned."""
         aggs = [F.count(F.lit(1)).alias("n")]
         for name, (col, buckets, _, _) in _HISTOGRAMS.items():
             v = F.col(col).cast("double")
             aggs += [F.count_if(v <= float(b)).alias(f"{name}_b{i}") for i, b in enumerate(buckets)]
-            aggs += [F.count(v).alias(f"{name}_cnt"), F.sum(v).alias(f"{name}_sum")]
+            aggs += [
+                F.count(v).alias(f"{name}_cnt"),
+                F.sum(F.col(col).cast("decimal(38,6)")).alias(f"{name}_sum"),
+            ]
         return df.groupBy("row_type", "err_type", "obs_label", "error_code").agg(*aggs).collect()
 
     def _route(self, rows: list) -> None:
@@ -168,7 +181,7 @@ class PrometheusSnapshotSink:
                 for i, b in enumerate(h.buckets):
                     h.counts[b] += r[f"{name}_b{i}"]
                 h.total += r[f"{name}_cnt"]
-                h.sum += r[f"{name}_sum"] or 0.0
+                h.exact_sum += r[f"{name}_sum"] or 0
 
     # -- exposition ---------------------------------------------------------
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..sources.tables import fan_out, memo, read_parquet_nanos_safe  # noqa: F401 — fan_out re-exported; moved to sources.tables in r13 so operators can use it
 
@@ -269,26 +269,112 @@ def kcore_rounds(edges: DataFrame, nodes: DataFrame, k: int, rounds: int) -> lis
     endpoint semi-joins broadcast it and the edge list is filtered at scan
     instead of shuffled twice a round; both endpoints explode in one pass
     into a single degree aggregate. Survivors only shrink, so later rounds
-    are cheaper; the per-round lazy ``localCheckpoint`` cuts the lineage.
-    Beyond a broadcastable V this becomes a bloom-filtered keyed
-    semi-join of the same shape."""
+    are cheaper. Beyond a broadcastable V this becomes a bloom-filtered
+    keyed semi-join of the same shape."""
     from pyspark.sql import functions as F
 
-    frames = [nodes]
-    for _ in range(rounds):
+    from ..operators.rounds import rounds as run_rounds
+
+    def step(nodes: DataFrame) -> DataFrame:
         live = edges.join(
             F.broadcast(nodes.select(F.col("id").alias("src"))), "src"
         ).join(F.broadcast(nodes.select(F.col("id").alias("dst"))), "dst")
-        nodes = (
+        return (
             live.select(F.explode(F.array("src", "dst")).alias("id"))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
             .select("id")
-            .localCheckpoint(eager=False)
         )
-        frames.append(nodes)
-    return frames
+
+    return run_rounds(nodes, step, rounds)
+
+
+def newton_logit(obs: DataFrame, target: Column, iters: int) -> DataFrame:
+    """``iters`` Newton–Raphson (IRLS) steps of a one-feature logistic fit
+    from (0, 0): the 1-row params ``(b0q, b1q)`` in micro-units. ``obs``
+    carries the feature ``x``; ``target`` is the per-row target in
+    micro-units (``y * 1000000``, or Platt's soft target ``tq``). p is
+    quantized BEFORE the integer moment sums and the 2×2 solve is one
+    fixed Cramer expression, so both engines iterate on identical
+    integers; ``newton_logit_sql`` is the oracle's step."""
+    from pyspark.sql import functions as F
+
+    from ..operators.rounds import rounds
+
+    def step(params: DataFrame) -> DataFrame:
+        z = (F.col("b0q") + F.col("b1q") * F.col("x")) / F.lit(1e6)
+        p = F.least(
+            F.greatest(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), F.lit(1e-6)),
+            F.lit(1.0 - 1e-6),
+        )
+        pq = F.floor(p * 1e6 + F.lit(0.5)).cast("bigint")
+        wq = F.expr("pq * (1000000 - pq) DIV 1000000")
+        m = (
+            obs.crossJoin(F.broadcast(params))
+            .withColumn("pq", pq)
+            .agg(
+                F.any_value("b0q").alias("b0q"),
+                F.any_value("b1q").alias("b1q"),
+                F.sum(target - F.col("pq")).cast("bigint").alias("g0"),
+                F.sum((target - F.col("pq")) * F.col("x")).cast("bigint").alias("g1"),
+                F.sum(wq).cast("bigint").alias("h00"),
+                F.sum(wq * F.col("x")).cast("bigint").alias("h01"),
+                F.sum(wq * F.col("x") * F.col("x")).cast("bigint").alias("h11"),
+            )
+        )
+        det = (
+            F.col("h00").cast("double") * F.col("h11")
+            - F.col("h01").cast("double") * F.col("h01")
+        )
+
+        def update(b: str, num: Column) -> Column:
+            return (F.col(b) + F.floor(num / det * 1e6 + F.lit(0.5))).cast("bigint").alias(b)
+
+        return m.select(
+            update(
+                "b0q",
+                F.col("h11").cast("double") * F.col("g0")
+                - F.col("h01").cast("double") * F.col("g1"),
+            ),
+            update(
+                "b1q",
+                F.col("h00").cast("double") * F.col("g1")
+                - F.col("h01").cast("double") * F.col("g0"),
+            ),
+        )
+
+    params = obs.sparkSession.createDataFrame([(0, 0)], "b0q bigint, b1q bigint")
+    return rounds(params, step, iters)[-1]
+
+
+def newton_logit_sql(prev: str, this: str, target: str) -> str:
+    """The oracle's ``newton_logit`` step: CTE ``this`` from params CTE
+    ``prev`` over the ``obs`` CTE, ``target`` an expression over ``o``."""
+    return f"""
+    {this} AS MATERIALIZED (
+      SELECT CAST(b0q + floor((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)
+                   / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)
+                   * 1e6 + 0.5) AS BIGINT) AS b0q,
+             CAST(b1q + floor((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)
+                   / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)
+                   * 1e6 + 0.5) AS BIGINT) AS b1q
+      FROM (
+        SELECT any_value(b.b0q) AS b0q, any_value(b.b1q) AS b1q,
+               CAST(sum({target} - pq.pq) AS BIGINT) AS g0,
+               CAST(sum(({target} - pq.pq) * o.x) AS BIGINT) AS g1,
+               CAST(sum(pq.pq * (1000000 - pq.pq) // 1000000) AS BIGINT) AS h00,
+               CAST(sum((pq.pq * (1000000 - pq.pq) // 1000000) * o.x) AS BIGINT)
+                 AS h01,
+               CAST(sum((pq.pq * (1000000 - pq.pq) // 1000000) * o.x * o.x)
+                    AS BIGINT) AS h11
+        FROM obs o CROSS JOIN {prev} b,
+             LATERAL (SELECT CAST(floor(
+               least(greatest(
+                 1.0 / (1.0 + exp(-(b.b0q + b.b1q * o.x) / 1e6)),
+                 1e-6), 1.0 - 1e-6) * 1e6 + 0.5) AS BIGINT) AS pq) pq
+      )
+    )"""
 
 
 # Shared oracle for the five ANN error-bound certificates (LSH / IVF /

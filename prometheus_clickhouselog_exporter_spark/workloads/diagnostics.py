@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.rounds import rounds
 from .core import fround, name_graph, query, table
 
 
@@ -318,18 +319,20 @@ def graph_pagerank_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = nm.count()  # vocabulary-sized by construction (distinct-first)
     ranks = nm.select("p_name", F.lit(1.0 / n_nodes).alias("p"))
     contrib_base = e.join(deg, "src")
-    for _ in range(3):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
             contrib_base.join(ranks, ranks["p_name"] == contrib_base["src"])
             .select("dst", (F.col("p") / F.col("d")).alias("share"))
             .groupBy("dst")
             .agg(F.sum("share").alias("mass"))
         )
-        ranks = nm.join(contribs, nm["p_name"] == contribs["dst"], "left").select(
+        return nm.join(contribs, nm["p_name"] == contribs["dst"], "left").select(
             "p_name",
             (0.15 / n_nodes + 0.85 * F.coalesce(F.col("mass"), F.lit(0.0))).alias("p"),
         )
-        ranks = ranks.localCheckpoint(eager=False)
+
+    ranks = rounds(ranks, step, 3)[-1]
     return (
         nm.join(ranks, "p_name")
         .join(deg, nm["p_name"] == deg["src"], "left")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.rounds import rounds
 from .core import corpus_key, fround, query, table
 
 _K = 8
@@ -60,7 +61,8 @@ def _kmeans_state(spark: SparkSession, sf_dir: str):
         F.lit(1).cast("bigint").alias("cnt"),
     )
     wmin = Window.partitionBy("vec_id").orderBy("ratio", "cid")
-    for _ in range(_ROUNDS):
+
+    def step(cent: DataFrame) -> DataFrame:
         scored = pts.crossJoin(F.broadcast(cent)).select(
             "vec_id",
             "xq",
@@ -84,20 +86,15 @@ def _kmeans_state(spark: SparkSession, sf_dir: str):
             .groupBy("cid", "dim")
             .agg(F.sum("v").alias("sv"), F.count(F.lit(1)).alias("cdim"))
         )
-        cent = (
-            dims.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim", "sv"))
-                    ),
-                    lambda t: t.getField("sv"),
-                ).alias("s"),
-                F.max("cdim").alias("cnt"),
-            )
-            .localCheckpoint(eager=False)
+        return dims.groupBy("cid").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "sv"))),
+                lambda t: t.getField("sv"),
+            ).alias("s"),
+            F.max("cdim").alias("cnt"),
         )
-    return pts, cent, wmin
+
+    return pts, rounds(cent, step, _ROUNDS)[-1], wmin
 
 
 def _sql_d2(x: str, s: str, cnt: str) -> str:

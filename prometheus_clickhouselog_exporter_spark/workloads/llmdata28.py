@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fan_out, MD5_SQL, fround, md5_long, query, table
+from ..operators.rounds import rounds
+from .core import fan_out, MD5_SQL, fround, md5_long, newton_logit, newton_logit_sql, query, table
 
 _P = 32  # signature positions (perms)
 _R = 4  # band width -> 8 bands; P(candidate|J) = 1-(1-J^4)^8
@@ -800,8 +801,9 @@ def text_keyphrase_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ws = e.select("u").distinct().select(
         F.col("u").alias("word"), F.lit(1_000_000).cast("bigint").alias("ws")
     )
-    for _ in range(_TR_ITERS):
-        ws = (
+
+    def step(ws: DataFrame) -> DataFrame:
+        return (
             e.join(ws.select(F.col("word").alias("u"), "ws"), "u")
             .join(outw, "u")
             .groupBy(F.col("v").alias("word"))
@@ -817,44 +819,15 @@ def text_keyphrase_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("ws")
             )
-            .localCheckpoint(eager=False)
         )
+
+    ws = rounds(ws, step, _TR_ITERS)[-1]
     return ws.select("word", F.col("ws").alias("score_q")).orderBy(
         F.desc("score_q"), "word"
     ).limit(10)
 
 
 _LOGIT_ITERS = 2
-
-
-def _logit_iter_sql(prev: str, this: str) -> str:
-    # one Newton-Raphson step from integer-quantized params: per-row p
-    # quantized to 1e6 BEFORE the moment sums, curvature w derived from
-    # p_q by integer arithmetic, 2x2 solve in one fixed expression
-    return f"""
-    {this} AS MATERIALIZED (
-      SELECT CAST(b0q + floor((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)
-                   / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)
-                   * 1e6 + 0.5) AS BIGINT) AS b0q,
-             CAST(b1q + floor((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)
-                   / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)
-                   * 1e6 + 0.5) AS BIGINT) AS b1q
-      FROM (
-        SELECT any_value(b.b0q) AS b0q, any_value(b.b1q) AS b1q,
-               CAST(sum(o.y * 1000000 - pq.pq) AS BIGINT) AS g0,
-               CAST(sum((o.y * 1000000 - pq.pq) * o.x) AS BIGINT) AS g1,
-               CAST(sum(pq.pq * (1000000 - pq.pq) // 1000000) AS BIGINT) AS h00,
-               CAST(sum((pq.pq * (1000000 - pq.pq) // 1000000) * o.x) AS BIGINT)
-                 AS h01,
-               CAST(sum((pq.pq * (1000000 - pq.pq) // 1000000) * o.x * o.x)
-                    AS BIGINT) AS h11
-        FROM obs o CROSS JOIN {prev} b,
-             LATERAL (SELECT CAST(floor(
-               least(greatest(
-                 1.0 / (1.0 + exp(-(b.b0q + b.b1q * o.x) / 1e6)),
-                 1e-6), 1.0 - 1e-6) * 1e6 + 0.5) AS BIGINT) AS pq) pq
-      )
-    )"""
 
 
 @query(
@@ -867,7 +840,7 @@ def _logit_iter_sql(prev: str, this: str) -> str:
     ),
     it0 AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS b0q,
                                 CAST(0 AS BIGINT) AS b1q),
-    {",".join(_logit_iter_sql(f'it{i}', f'it{i + 1}') for i in range(_LOGIT_ITERS))}
+    {",".join(newton_logit_sql(f'it{i}', f'it{i + 1}', 'o.y * 1000000') for i in range(_LOGIT_ITERS))}
     SELECT CAST((SELECT count(*) FROM obs) AS BIGINT) AS n,
            b.b0q AS b0_q, b.b1q AS b1_q,
            CAST((
@@ -909,70 +882,7 @@ def ml_logistic_newton2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("y"),
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT) DIV 100").alias("x"),
     ).localCheckpoint(eager=False)  # 2 iterations + n + ll reuse it
-    params = obs.sparkSession.createDataFrame(
-        [(0, 0)], "b0q bigint, b1q bigint"
-    )
-    for _ in range(_LOGIT_ITERS):
-        z = (F.col("b0q") + F.col("b1q") * F.col("x")) / F.lit(1e6)
-        p = F.least(
-            F.greatest(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), F.lit(1e-6)
-            ),
-            F.lit(1.0 - 1e-6),
-        )
-        pq = F.floor(p * 1e6 + F.lit(0.5)).cast("bigint")
-        wq = F.expr("pq * (1000000 - pq) DIV 1000000")
-        m = (
-            obs.crossJoin(F.broadcast(params))
-            .withColumn("pq", pq)
-            .agg(
-                F.any_value("b0q").alias("b0q"),
-                F.any_value("b1q").alias("b1q"),
-                F.sum(F.col("y") * 1_000_000 - F.col("pq"))
-                .cast("bigint")
-                .alias("g0"),
-                F.sum((F.col("y") * 1_000_000 - F.col("pq")) * F.col("x"))
-                .cast("bigint")
-                .alias("g1"),
-                F.sum(wq).cast("bigint").alias("h00"),
-                F.sum(wq * F.col("x")).cast("bigint").alias("h01"),
-                F.sum(wq * F.col("x") * F.col("x")).cast("bigint").alias("h11"),
-            )
-        )
-        det = (
-            F.col("h00").cast("double") * F.col("h11")
-            - F.col("h01").cast("double") * F.col("h01")
-        )
-        params = m.select(
-            (
-                F.col("b0q")
-                + F.floor(
-                    (
-                        F.col("h11").cast("double") * F.col("g0")
-                        - F.col("h01").cast("double") * F.col("g1")
-                    )
-                    / det
-                    * 1e6
-                    + F.lit(0.5)
-                )
-            )
-            .cast("bigint")
-            .alias("b0q"),
-            (
-                F.col("b1q")
-                + F.floor(
-                    (
-                        F.col("h00").cast("double") * F.col("g1")
-                        - F.col("h01").cast("double") * F.col("g0")
-                    )
-                    / det
-                    * 1e6
-                    + F.lit(0.5)
-                )
-            )
-            .cast("bigint")
-            .alias("b1q"),
-        ).localCheckpoint(eager=False)
+    params = newton_logit(obs, F.col("y") * 1_000_000, _LOGIT_ITERS)
     z = (F.col("b0q") + F.col("b1q") * F.col("x")) / F.lit(1e6)
     p = F.least(
         F.greatest(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), F.lit(1e-6)),

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import shingle_hashes, word_shingles
+from ..operators.rounds import rounds
 from .core import fan_out, query, table
 
 _TOPK_VOCAB = 10
@@ -687,8 +688,8 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         x_long.filter(F.col("vec_id") < _KM_C)
         .select("j", F.col("vec_id").cast("int").alias("cid"), F.col("xj").alias("cj"))
     )
-    assign = None
-    for _ in range(_KM_ITERS):
+
+    def assign_to(cent: DataFrame) -> DataFrame:
         qd = (
             x_long.join(F.broadcast(cent), "j")
             .groupBy("vec_id", "cid")
@@ -700,11 +701,13 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("qd")
             )
         )
-        assign = qd.groupBy("vec_id").agg(
+        return qd.groupBy("vec_id").agg(
             F.min_by("cid", F.struct("qd", "cid")).alias("cid")
         )
-        cent = (
-            x_long.join(assign, "vec_id")
+
+    def step(cent: DataFrame) -> DataFrame:
+        return (
+            x_long.join(assign_to(cent), "vec_id")
             .groupBy("j", "cid")
             .agg(
                 (
@@ -712,8 +715,11 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.count(F.lit(1))
                 ).alias("cj")
             )
-            .localCheckpoint(eager=False)
         )
+
+    cents = rounds(cent, step, _KM_ITERS)
+    # the final assignment is the last round's, against its input centroids
+    assign, cent = assign_to(cents[-2]), cents[-1]
     checksum = cent.groupBy("cid").agg(
         F.sum(F.floor(F.col("cj") * 1e6).cast("long")).alias("centroid_q6_sum")
     )

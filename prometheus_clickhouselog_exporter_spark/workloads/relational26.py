@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import min_label_rounds
+from ..operators.rounds import rounds
 from .core import name_graph, query
 
 _LP_ROUNDS = 3
@@ -85,7 +86,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nm, e = name_graph(spark, sf_dir)
     lab = nm.select("p_name", F.col("p_name").alias("label"))
     wpick = Window.partitionBy("dst").orderBy(F.desc("c"), "label")
-    for _ in range(_LP_ROUNDS):
+
+    def step(lab: DataFrame) -> DataFrame:
         votes = (
             e.join(
                 lab.select(F.col("p_name").alias("src"), "label"), "src"
@@ -98,14 +100,12 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") == 1)
             .select(F.col("dst").alias("p_name"), F.col("label").alias("nl"))
         )
-        lab = (
-            lab.join(pick, "p_name", "left")
-            .select(
-                "p_name",
-                F.coalesce(F.col("nl"), F.col("label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return lab.join(pick, "p_name", "left").select(
+            "p_name",
+            F.coalesce(F.col("nl"), F.col("label")).alias("label"),
         )
+
+    lab = rounds(lab, step, _LP_ROUNDS)[-1]
     return (
         lab.groupBy(F.col("label").alias("community"))
         .agg(

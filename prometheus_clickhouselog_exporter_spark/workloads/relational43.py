@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.rounds import rounds
 from .core import fround, query, table
 
 _BT_ITERS = 2
@@ -361,8 +362,9 @@ def eval_pairwise_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("games"),
     ).localCheckpoint(eager=False)
     pi = wl.select("s", F.lit(_BT_Q).cast("bigint").alias("q"))
-    for it in range(_BT_ITERS):
-        pi = (
+
+    def step(pi: DataFrame) -> DataFrame:
+        return (
             both.join(F.broadcast(pi.select(F.col("s"), F.col("q"))), "s")
             .join(
                 F.broadcast(
@@ -392,11 +394,10 @@ def eval_pairwise_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("q"),
             )
         )
-        if it < _BT_ITERS - 1:
-            # intermediate rounds cut lineage; the LAST round stays
-            # un-checkpointed so the rank window's bounding aggregate
-            # remains visible to the plan audit (the verify-skill rule)
-            pi = pi.localCheckpoint(eager=False)
+
+    # the LAST round stays un-checkpointed so the rank window's bounding
+    # aggregate remains visible to the plan audit (the verify-skill rule)
+    pi = step(rounds(pi, step, _BT_ITERS - 1)[-1])
     return (
         pi.join(F.broadcast(wl), "s")
         .select(

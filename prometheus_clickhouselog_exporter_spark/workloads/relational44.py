@@ -576,9 +576,9 @@ def graph_cc_large_small_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     the propagation labels exactly (and tests/test_relational44.py
     re-asserts the two algorithms' censuses agree in-engine).
 
-    The star step is ``operators.dedup.large_star``/``small_star``
-    (the same step ``connected_components_star`` iterates to its
-    probe); here it runs a fixed _LSS_PAIRS pairs over one row per
+    The star step is ``operators.dedup.star_round`` (the same round
+    ``connected_components_star`` iterates to its fixpoint); here
+    ``rounds`` runs a fixed _LSS_PAIRS of them over one row per
     undirected edge, and each node's label is its smaller partner in
     the final star forest (a center keeps its own name).
 
@@ -587,15 +587,15 @@ def graph_cc_large_small_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair; no node ever aggregates more than its degree.
 
     Ref cite: none — /root/reference has no graph surface."""
-    from ..operators.dedup import large_star, small_star
+    from ..operators.dedup import star_round
+    from ..operators.rounds import rounds
 
     nm, e0 = name_graph(spark, sf_dir)
     # e0 is symmetric: keep one (u, v) row per undirected edge
     E = e0.filter(F.col("src") > F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    for _ in range(_LSS_PAIRS):
-        E = small_star(large_star(E)).localCheckpoint(eager=False)
+    E = rounds(E, star_round, _LSS_PAIRS)[-1]
     # star forest: every non-center u points at its component minimum
     partner = E.groupBy("u").agg(F.min("v").alias("mn"))
     lab = nm.join(partner, nm["p_name"] == partner["u"], "left").select(

@@ -116,8 +116,8 @@ def graph_bfs_name_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate keyed by destination. Fixed rounds keep the job graph
     static and the oracle expressible as unrolled SQL; a production run
     loops until a 1-row convergence checksum stops changing (the CC
-    discipline: ``dedup.connected_components`` probes ``_checksum``
-    around ``min_label_rounds``, the kernel these rounds run with
+    discipline: ``dedup.connected_components`` runs ``rounds.fixpoint``
+    over ``min_label_rounds``' step, the kernel these rounds run with
     ``weight=1``), checkpointing each round.
 
     100 TB: the graph derives distinct-first so it is vocabulary-sized

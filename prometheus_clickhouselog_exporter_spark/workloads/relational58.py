@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .core import fround, name_graph, query, table, triangles
+from ..operators.rounds import rounds
+from .core import fround, name_graph, newton_logit, newton_logit_sql, query, table, triangles
 
 # --- STL-lite seasonal/trend strength --------------------------------------------
 
@@ -198,38 +199,6 @@ def timeseries_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PLATT_ITERS = 2
 
-
-def _platt_iter_sql(prev: str, this: str) -> str:
-    # one Newton step on (b0, b1) for sigmoid calibration with Platt's
-    # soft targets: identical integer-quantized discipline as
-    # ml_logistic_newton2 (llmdata28) — p quantized to 1e6 BEFORE the
-    # moment sums, curvature from the quantized p by integer arithmetic
-    return f"""
-    {this} AS MATERIALIZED (
-      SELECT CAST(b0q + floor((CAST(h11 AS DOUBLE) * g0 - CAST(h01 AS DOUBLE) * g1)
-                   / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)
-                   * 1e6 + 0.5) AS BIGINT) AS b0q,
-             CAST(b1q + floor((CAST(h00 AS DOUBLE) * g1 - CAST(h01 AS DOUBLE) * g0)
-                   / (CAST(h00 AS DOUBLE) * h11 - CAST(h01 AS DOUBLE) * h01)
-                   * 1e6 + 0.5) AS BIGINT) AS b1q
-      FROM (
-        SELECT any_value(b.b0q) AS b0q, any_value(b.b1q) AS b1q,
-               CAST(sum(o.tq - pq.pq) AS BIGINT) AS g0,
-               CAST(sum((o.tq - pq.pq) * o.x) AS BIGINT) AS g1,
-               CAST(sum(pq.pq * (1000000 - pq.pq) // 1000000) AS BIGINT) AS h00,
-               CAST(sum((pq.pq * (1000000 - pq.pq) // 1000000) * o.x) AS BIGINT)
-                 AS h01,
-               CAST(sum((pq.pq * (1000000 - pq.pq) // 1000000) * o.x * o.x)
-                    AS BIGINT) AS h11
-        FROM obs o CROSS JOIN {prev} b,
-             LATERAL (SELECT CAST(floor(
-               least(greatest(
-                 1.0 / (1.0 + exp(-(b.b0q + b.b1q * o.x) / 1e6)),
-                 1e-6), 1.0 - 1e-6) * 1e6 + 0.5) AS BIGINT) AS pq) pq
-      )
-    )"""
-
-
 _PLATT_ORACLE = (
     """
     WITH raw AS (
@@ -259,7 +228,7 @@ _PLATT_ORACLE = (
                                 CAST(0 AS BIGINT) AS b1q),
     """
     + ",".join(
-        _platt_iter_sql(f"it{i}", f"it{i + 1}") for i in range(_PLATT_ITERS)
+        newton_logit_sql(f"it{i}", f"it{i + 1}", "o.tq") for i in range(_PLATT_ITERS)
     )
     + f"""
     SELECT CAST((SELECT count(*) FROM obs) AS BIGINT) AS n,
@@ -279,12 +248,9 @@ def ml_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps — distinguished from plain logistic regression
     (ml_logistic_newton2) by Platt's regularizing SOFT TARGETS
     t₊ = (N₊+1)/(N₊+2), t₋ = 1/(N₋+2) derived from exact class counts,
-    which keep the fit from saturating on separable data. Identical
-    cross-engine discipline as the logistic trainer: targets and
-    per-row probabilities quantize to integer micro-units BEFORE the
-    moment sums, curvature derives from the quantized p by integer
-    arithmetic, the 2×2 solve is one fixed Cramer expression, params
-    re-quantize between the two unrolled iterations.
+    which keep the fit from saturating on separable data. The targets
+    quantize to integer micro-units once; the Newton step is the
+    logistic trainer's (``core.newton_logit``, target ``tq``).
 
     100 TB: per iteration ONE map-side-combinable aggregate (5 integer
     sums) + a 1-row parameter broadcast — distributed IRLS.
@@ -317,66 +283,7 @@ def ml_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("y", "x", tq.alias("tq"), "np")
         .localCheckpoint(eager=False)  # both iterations + final probe
     )
-    params = obs.sparkSession.createDataFrame(
-        [(0, 0)], "b0q bigint, b1q bigint"
-    )
-    for _ in range(_PLATT_ITERS):
-        z = (F.col("b0q") + F.col("b1q") * F.col("x")) / F.lit(1e6)
-        p = F.least(
-            F.greatest(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), F.lit(1e-6)),
-            F.lit(1.0 - 1e-6),
-        )
-        pq = F.floor(p * 1e6 + F.lit(0.5)).cast("bigint")
-        wq = F.expr("pq * (1000000 - pq) DIV 1000000")
-        m = (
-            obs.crossJoin(F.broadcast(params))
-            .withColumn("pq", pq)
-            .agg(
-                F.any_value("b0q").alias("b0q"),
-                F.any_value("b1q").alias("b1q"),
-                F.sum(F.col("tq") - F.col("pq")).cast("bigint").alias("g0"),
-                F.sum((F.col("tq") - F.col("pq")) * F.col("x"))
-                .cast("bigint")
-                .alias("g1"),
-                F.sum(wq).cast("bigint").alias("h00"),
-                F.sum(wq * F.col("x")).cast("bigint").alias("h01"),
-                F.sum(wq * F.col("x") * F.col("x")).cast("bigint").alias("h11"),
-            )
-        )
-        det = (
-            F.col("h00").cast("double") * F.col("h11")
-            - F.col("h01").cast("double") * F.col("h01")
-        )
-        params = m.select(
-            (
-                F.col("b0q")
-                + F.floor(
-                    (
-                        F.col("h11").cast("double") * F.col("g0")
-                        - F.col("h01").cast("double") * F.col("g1")
-                    )
-                    / det
-                    * 1e6
-                    + F.lit(0.5)
-                )
-            )
-            .cast("bigint")
-            .alias("b0q"),
-            (
-                F.col("b1q")
-                + F.floor(
-                    (
-                        F.col("h00").cast("double") * F.col("g1")
-                        - F.col("h01").cast("double") * F.col("g0")
-                    )
-                    / det
-                    * 1e6
-                    + F.lit(0.5)
-                )
-            )
-            .cast("bigint")
-            .alias("b1q"),
-        ).localCheckpoint(eager=False)
+    params = newton_logit(obs, F.col("tq"), _PLATT_ITERS)
     n_row = obs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.any_value("np").cast("bigint").alias("n_pos"),
@@ -594,9 +501,8 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref cite: none — §2.3 graph territory."""
     _, e = name_graph(spark, sf_dir)
     e0 = e.filter(F.col("src") < F.col("dst")).select("src", "dst")
-    edges = [e0]
-    cur = e0
-    for _ in range(_TRUSS_ROUNDS):
+
+    def step(cur: DataFrame) -> DataFrame:
         tri = triangles(cur)
         sup = (
             tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
@@ -610,10 +516,9 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("s"))
             .where(F.col("s") >= _TRUSS_K - 2)
         )
-        cur = cur.join(sup.select("src", "dst"), ["src", "dst"]).localCheckpoint(
-            eager=False
-        )
-        edges.append(cur)
+        return cur.join(sup.select("src", "dst"), ["src", "dst"])
+
+    edges = rounds(e0, step, _TRUSS_ROUNDS)
     fin = edges[-1].select(
         F.col("src").alias("fsrc"), F.col("dst").alias("fdst")
     )

@@ -41,8 +41,7 @@ def main() -> int:
     from prometheus_clickhouselog_exporter_spark.session import get_spark
     from prometheus_clickhouselog_exporter_spark.workloads import QUERIES
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench_full", cores=cpus, shuffle_partitions=cpus)
+    spark = get_spark("bench_full")
 
     # warm the session (codegen, parquet footers for the common tables)
     QUERIES["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode(

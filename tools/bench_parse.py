@@ -27,9 +27,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 def main() -> None:
     copies = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from prometheus_clickhouselog_exporter_spark.session import get_spark
+    from prometheus_clickhouselog_exporter_spark.session import DEFAULT_CPUS as cpus, get_spark
     from prometheus_clickhouselog_exporter_spark.operators.parsing import parse_log_lines
     from prometheus_clickhouselog_exporter_spark.sources.fixtures import standard_corpus
 

@@ -27,8 +27,7 @@ def main() -> None:
     from prometheus_clickhouselog_exporter_spark.session import get_spark
     from prometheus_clickhouselog_exporter_spark.workloads import QUERIES
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("dump-plan", cores=cpus, shuffle_partitions=cpus)
+    spark = get_spark("dump-plan")
     for name in rest:
         df = QUERIES[name](spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(

@@ -23,12 +23,11 @@ from pyspark.sql.types import ArrayType, MapType, StructType
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from prometheus_clickhouselog_exporter_spark.session import get_spark
     from prometheus_clickhouselog_exporter_spark.workloads import QUERIES
 
-    spark = get_spark("schema-audit", cores=cpus, shuffle_partitions=cpus)
+    spark = get_spark("schema-audit")
     bad: list[tuple[str, str, str]] = []
     errs: list[tuple[str, str]] = []
     for i, (name, fn) in enumerate(QUERIES.items()):

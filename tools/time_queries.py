@@ -72,12 +72,11 @@ def main() -> None:
         else:
             names.append(args[i])
             i += 1
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from prometheus_clickhouselog_exporter_spark.session import get_spark
     from prometheus_clickhouselog_exporter_spark.workloads import QUERIES
 
-    spark = get_spark("time-queries", cores=cpus, shuffle_partitions=cpus)
+    spark = get_spark("time-queries")
 
     patch_points = []
     if ab:
